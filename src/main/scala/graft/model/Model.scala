@@ -122,15 +122,10 @@ final case class EngineConfig(
     problemStrategy: ProblemStrategy = ProblemStrategy.Stop,
     maxBatchSize: Int = 1000,     // initial-scan per-txn cap
     buckets: Int = 64,            // destination bucket count
-    // Destination write mode. Merge-on-read (the default — the
-    // scale-safe production entry) appends each commit's LWW patch as
-    // per-bucket delta files and merges lazily at read time, so
-    // steady-state bytes written per commit scale with the PATCH, not
-    // the table; copy-on-write (false) rewrites every affected bucket
-    // per commit — at a 100 TB destination under uniformly-keyed
-    // batches that approaches a full-table rewrite per micro-batch.
-    mergeOnRead: Boolean = true,
-    // A bucket whose delta chain reaches this many files is folded
+    // The destination is merge-on-read: each commit appends its LWW
+    // patch as per-bucket delta files, so steady-state bytes written
+    // per commit scale with the PATCH, not the table. A bucket whose
+    // delta chain reaches this many files is folded
     // back into its base (the CoW rewrite as compaction primitive),
     // bounding read amplification; read-side merge work ∝ chain length.
     compactDeltas: Int = 8,
@@ -145,12 +140,4 @@ final case class EngineConfig(
     standbyMaxWaitMillis: Long = 600000L,
     // monitoring endpoint (reference mon_server): Some(0) = any free
     // port; None = no server
-    monPort: Option[Int] = None,
-    // Low-latency emission regime: when a batch's working set has at
-    // most this many rows, emission runs with AQE off and ONE shuffle
-    // partition — one job per action, one task per stage — instead of
-    // the adaptive plan-per-stage machinery that dominates wall time
-    // for small batches. The default assumes ~100-byte change rows:
-    // 250k rows ≈ 25 MB, comfortably one task. Large batches (initial
-    // scans, catch-up) keep the adaptive path. 0 disables the regime.
-    smallBatchRows: Long = 250000L)
+    monPort: Option[Int] = None)

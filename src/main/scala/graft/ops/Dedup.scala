@@ -487,6 +487,13 @@ object Dedup {
   /** Hamming distance between two simhash values. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
+  /** Hamming distance between two 128-bit hashes held as (hi, lo)
+    * long pairs, as a long.
+    */
+  def hamming128(hiA: Column, loA: Column, hiB: Column,
+      loB: Column): Column =
+    (hamming(hiA, hiB) + hamming(loA, loB)).cast("long")
+
   /** SimHash near-dup pairs with hamming ≤ maxDist over 32-bit
     * fingerprints. Candidate generation by the pigeonhole principle:
     * split into `bands` equal bit-bands — any pair within distance

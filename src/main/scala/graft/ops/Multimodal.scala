@@ -467,9 +467,8 @@ object Multimodal {
     a.join(b, Seq("bi", "bv"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b", "ha", "la", "hb", "lb").distinct()
-      .withColumn("hamming",
-        (bit_count(col("ha").bitwiseXOR(col("hb"))) +
-          bit_count(col("la").bitwiseXOR(col("lb")))).cast("long"))
+      .withColumn("hamming", Dedup.hamming128(col("ha"), col("la"),
+        col("hb"), col("lb")))
       .filter(col("hamming") <= maxDist.toLong)
       .select("id_a", "id_b", "hamming")
   }

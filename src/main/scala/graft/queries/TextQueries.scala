@@ -1015,7 +1015,7 @@ object TextQueries {
     * controlled-distance CLIPS ([[videoR1Payload]]) through the
     * stateful majority-of-frames Hamming-≤6 seen-set, compaction
     * between batches 1 and 2 (the [[nearDupGateStateDir]] shape at
-    * the clip tier — GateStateStore consumer #7).
+    * the clip tier — StandingGate consumer #7).
     */
   private def videoGateStateDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
@@ -2114,7 +2114,7 @@ object TextQueries {
       val root = gateStateDir(s, d)
       new graft.streaming.IngestGate(s, root,
         k = MinhashK, rowsPerBand = RowsPerBand, threshold = MinhashJaccard)
-        .readVerdicts()
+        .readVerdicts(1L)
         .select(col("doc_id"), col("batch").cast("long").as("batch"),
           col("verdict"), col("dup_of"),
           round(col("best_jac"), 6).as("best_jac"))
@@ -3206,7 +3206,7 @@ object TextQueries {
     },
 
     // Streaming perceptual media gate e2e (MediaGate on the shared
-    // GateStateStore): three micro-batches of the brightness-variant
+    // StandingGate): three micro-batches of the brightness-variant
     // images through the standing dHash seen-set — the smallest id
     // claims each hash within a batch, later batches' re-encodes of
     // an admitted image come back dup_of_corpus (new BYTES, seen
@@ -3267,7 +3267,7 @@ object TextQueries {
     },
 
     // Streaming NEAR-dup media gate e2e (NearDupMediaGate — the
-    // sixth GateStateStore consumer): the MediaGate admission rule
+    // sixth StandingGate consumer): the MediaGate admission rule
     // upgraded from exact-hash membership to guaranteed-recall
     // Hamming-≤6 matching, driven over the controlled-distance
     // payload in three doc_id%3 micro-batches with a compaction
@@ -3539,7 +3539,7 @@ object TextQueries {
         .orderBy("id_a", "id_b")
     },
 
-    // Streaming CLIP near-dup gate e2e (VideoGate — GateStateStore
+    // Streaming CLIP near-dup gate e2e (VideoGate — StandingGate
     // consumer #7): three micro-batches of the controlled-distance
     // clips through the standing majority-of-frames Hamming-≤6
     // seen-set, with a committed compaction between batches 1 and 2.
@@ -6498,7 +6498,7 @@ object TextQueries {
   private def urlQueries: Seq[QueryDef] = Seq(
 
     // Streaming URL-frontier gate e2e (UrlGate on the shared
-    // GateStateStore): three micro-batches of candidate URLs through
+    // StandingGate): three micro-batches of candidate URLs through
     // the standing canonical-hash seen-set — within-batch claims go
     // to the smallest id, later batches' re-spellings of an admitted
     // URL come back dup_of_corpus, grammar rejects come back

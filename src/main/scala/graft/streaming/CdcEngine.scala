@@ -166,6 +166,7 @@ final class CdcEngine(
     */
   def processBatch(raw: DataFrame, batchId: Long): Unit = {
     val t0 = System.nanoTime()
+    metrics.batchStarted()
     var man = TransactionalStore.read(root)
     if (man.state.state != EngineState.Ok)
       throw new IllegalStateException(
@@ -345,12 +346,12 @@ final class CdcEngine(
       phase("pending-union")
 
       // emission loop (ST2/ST5). Small working sets run in the
-      // low-latency regime (see EngineConfig.smallBatchRows), with a
+      // low-latency regime (see CdcEngine.SmallBatchRows), with a
       // shuffle width that scales with the set: ~25k rows per task,
       // so a near-empty steady-state batch plans ONE task while a
       // 250k-row batch still merges 10-wide.
       val nPending = statRow.getLong(0)
-      val small = cfg.smallBatchRows > 0 && nPending <= cfg.smallBatchRows
+      val small = nPending <= CdcEngine.SmallBatchRows
       val lowLatParts = math.max(1L, math.min(32L, nPending / 8000L + 1L)).toInt
       withLowLatency(small, lowLatParts) {
         man = if (man.state.stage == Stage.InitialScan)
@@ -367,8 +368,7 @@ final class CdcEngine(
       TransactionalStore.commit(root, man.copy(version = man.version + 1,
         fencingToken = lock.heldToken.getOrElse(0L),
         lastBatchId = math.max(batchId, man.lastBatchId)))
-      metrics.batchesCommitted.incrementAndGet()
-      metrics.lastCommitLatencyMs.set((System.nanoTime() - t0) / 1000000L)
+      metrics.batchCommitted((System.nanoTime() - t0) / 1000000L)
       // merge-on-read health: live chain files + chains folded away
       // this commit (O(#buckets) driver bookkeeping off the manifest)
       val chainsAfter = man.tables.iterator.flatMap { case (n, tv) =>
@@ -611,15 +611,16 @@ final class CdcEngine(
         rest.write.mode("overwrite").parquet(restDir)
         TransactionalStore.partFiles(restDir)
       }
-      // modificationsCount rides on each table's applyPatch metadata
-      // aggregation — no dedicated count job over the merge shuffle
+      // the modification count rides on each table's applyPatch
+      // metadata aggregation — no dedicated count job over the merge
+      // shuffle
       val tableFuts = tables.toSeq.map { case (tid, meta) =>
         meta.name -> Future {
           val patch = merged.filter(col("tableId") === tid)
           val (tv, n) = DstTable.applyPatch(spark, root, meta,
             cfg.buckets, man.tables(meta.name), patch, commitTag,
-            mergeOnRead = cfg.mergeOnRead, compactDeltas = cfg.compactDeltas)
-          metrics.modificationsCount.addAndGet(n)
+            mergeOnRead = true, compactDeltas = cfg.compactDeltas)
+          metrics.addMods(tid, n)
           tv
         }
       }
@@ -960,6 +961,16 @@ final class CdcEngine(
 }
 
 object CdcEngine {
+  /** Low-latency emission regime: when a batch's working set has at
+    * most this many rows, emission runs with AQE off and ONE shuffle
+    * partition — one job per action, one task per stage — instead of
+    * the adaptive plan-per-stage machinery that dominates wall time
+    * for small batches. Assumes ~100-byte change rows: 250k rows ≈
+    * 25 MB, comfortably one task. Large batches (initial scans,
+    * catch-up) keep the adaptive path.
+    */
+  val SmallBatchRows: Long = 250000L
+
   val pendingSchema: StructType = StructType(Seq(
     StructField("tableId", IntegerType),
     StructField("partitionId", LongType),

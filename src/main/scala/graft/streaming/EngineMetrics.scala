@@ -31,15 +31,33 @@ final class EngineMetrics {
   val bucketsCompacted = new AtomicLong(0)
   val lastError = new AtomicReference[String]("")
 
+  // modifications of the batch in progress, summed over its applyCuts,
+  // and of the last committed batch — the numerator of [[mps]]
+  private val batchMods = new AtomicLong(0)
+  private val lastBatchMods = new AtomicLong(0)
+
   def addMods(tableId: Int, n: Long): Unit = {
     modificationsCount.addAndGet(n)
+    batchMods.addAndGet(n)
     perStreamMods.getOrElseUpdate(tableId, new AtomicLong(0)).addAndGet(n)
+  }
+
+  /** A batch begins: modifications of an earlier batch that failed
+    * before its commit do not count toward this one.
+    */
+  def batchStarted(): Unit = batchMods.set(0)
+
+  /** A batch committed after `latencyMs`. */
+  def batchCommitted(latencyMs: Long): Unit = {
+    batchesCommitted.incrementAndGet()
+    lastCommitLatencyMs.set(latencyMs)
+    lastBatchMods.set(batchMods.getAndSet(0))
   }
 
   /** modifications/sec over the last batch. */
   def mps: Double = {
     val ms = lastCommitLatencyMs.get()
-    if (ms <= 0) 0.0 else modificationsCount.get() * 1000.0 / ms
+    if (ms <= 0) 0.0 else lastBatchMods.get() * 1000.0 / ms
   }
 
   def snapshot: Map[String, Long] = Map(

@@ -1,46 +1,35 @@
 package graft.streaming
 
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types._
 
 /** Streaming near-dup ingest gate: the production composition of
   * [[graft.ops.Dedup.incrementalNearDup]]. Each micro-batch of
-  * documents is (1) self-deduplicated greedily within the batch
-  * (drop any doc with a verified smaller-id near-dup in the same
-  * batch), (2) probed against the STANDING corpus band index, and
-  * (3) survivors are admitted — their `(id, hs, band_key)` band rows
-  * become corpus state for every later batch. A per-doc verdict
-  * (`admitted` / `dup_in_batch` / `dup_of_corpus`) is emitted.
+  * (doc_id, text) documents is (1) self-deduplicated greedily within
+  * the batch (drop any doc with a verified smaller-id near-dup in the
+  * same batch), (2) probed against the STANDING corpus band index,
+  * and (3) survivors are admitted. The corpus is never re-signatured:
+  * each batch costs one pass over the batch plus a band-key equi-join
+  * against the stored index, and a small batch side broadcasts under
+  * AQE.
   *
-  * State layout under `stateDir` (the [[GateStateStore]] conventions
-  * — overwrite-idempotent Hive partitions, `batch < n` replay guard,
-  * META-committed band_key-bucketed base, vacuum):
-  * {{{
-  *   corpus/batch=<n>/    admitted docs' band rows (recent batches)
-  *   base/gen=<g>/        compacted band index: one band_key-bucketed
-  *                        table folding every batch below the META
-  *                        watermark (written by [[compact]])
-  *   base/META.<g>        "<gen> <upTo>" — create-no-overwrite commit
-  *   verdicts/batch=<n>/  (doc_id, verdict, dup_of, best_jac)
-  * }}}
+  * Key and fold: `corpus/` holds admitted docs' `(doc_id, hs,
+  * band_key)` band rows, bucketed by `band_key`; the fold is the
+  * identity (the band index is append-only). The compacted base makes
+  * the big corpus side of the probe a bucket-pruned scan with NO
+  * Exchange — only the small batch side shuffles (plan-checked in
+  * IngestGateSpec).
   *
-  * Scale shape: the corpus is never re-signatured — each batch costs
-  * one pass over the batch plus a band-key equi-join against the
-  * stored index, and a small batch side broadcasts under AQE. Without
-  * maintenance the standing index grows one Hive partition per batch
-  * forever and the probe re-shuffles all of it every batch; [[compact]]
-  * is that maintenance: it folds every batch below the current
-  * high-water mark into a `base/gen=<g>` table BUCKETED by `band_key`
-  * (registered in the session catalog), so the big corpus side of the
-  * probe join is a bucket-pruned scan with NO Exchange — only the
-  * small batch side shuffles (plan-checked in IngestGateSpec).
+  * Verdicts `(doc_id, verdict, dup_of, best_jac)`: `dup_in_batch`,
+  * `dup_of_corpus` or `admitted`, with the matched id and Jaccard.
   */
 final class IngestGate(spark: SparkSession, stateDir: String,
     k: Int = 16, rowsPerBand: Int = 8, threshold: Double = 0.95,
-    numBuckets: Int = 64, probeCap: Int = IngestGate.DefaultProbeCap) {
+    numBuckets: Int = 64, probeCap: Int = IngestGate.DefaultProbeCap)
+    extends StandingGate[Row](spark, stateDir, "corpus",
+      "graft_gate_base", "doc_id BIGINT, hs ARRAY<BIGINT>, band_key STRING",
+      "band_key", numBuckets) {
 
   /** Per-batch admission counters, observed on the verdicts write
     * itself (no extra job — the EngineMetrics pattern).
@@ -51,39 +40,7 @@ final class IngestGate(spark: SparkSession, stateDir: String,
   @volatile private var lastStatsVar: Option[GateStats] = None
   def lastStats: Option[GateStats] = lastStatsVar
 
-  private val bandSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("hs", ArrayType(LongType)),
-    StructField("band_key", StringType)))
-
-  private val store = new GateStateStore(spark, stateDir,
-    dataSubdir = "corpus", tablePrefix = "graft_gate_base",
-    dataSchema = bandSchema, bucketCol = "band_key",
-    numBuckets = numBuckets)
-
-  /** Fold every corpus batch partition strictly below the watermark
-    * into the next base generation, bucketed by `band_key` — the
-    * [[GateStateStore.compact]] contract (identity fold: the band
-    * index is append-only). Returns the new watermark (exclusive).
-    */
-  def compact(currentBatchId: Long = Long.MaxValue): Long =
-    store.compact(currentBatchId)
-
-  /** Reclaim unreachable state — [[GateStateStore.vacuum]]. */
-  def vacuum(currentBatchId: Long): Int = store.vacuum(currentBatchId)
-
-  /** The compacted base index, if a compaction has committed — the
-    * band_key-bucketed big side of the probe join (plan-checked in
-    * IngestGateSpec to join without a corpus-side Exchange).
-    */
-  def baseIndex(): Option[DataFrame] = store.baseIndex()
-
-  /** Corpus band rows admitted by batches strictly before `batchId`
-    * (empty on the first batch / a fresh state dir) — the union view
-    * over [[GateStateStore.sources]], for callers that want the whole
-    * index.
-    */
-  def corpusBands(batchId: Long): DataFrame = store.sourcesUnion(batchId)
+  override protected def fold(rows: DataFrame): DataFrame = rows
 
   /** Probe every corpus source and merge the per-source verdicts:
     * `dup_of` is the global min matching corpus id and `best_jac` the
@@ -94,41 +51,31 @@ final class IngestGate(spark: SparkSession, stateDir: String,
     * stays exact — the guard is a bound on per-source fan-out, and
     * compaction folds sources together over time anyway).
     */
-  private def corpusDupVerdicts(batchId: Long, probe: DataFrame): DataFrame =
-    store.sources(batchId) match {
-      case Nil => Dedup.incrementalNearDupBands(
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bandSchema),
-        probe, "doc_id", threshold, probeCap)
-      case Seq(one) =>
-        Dedup.incrementalNearDupBands(one, probe, "doc_id", threshold,
-          probeCap)
-      case srcs =>
-        srcs.map(c =>
-          Dedup.incrementalNearDupBands(c, probe, "doc_id", threshold,
-            probeCap))
-          .reduce(_ unionByName _)
+  private def corpusDupVerdicts(batchId: Long, probe: DataFrame): DataFrame = {
+    def one(c: DataFrame) =
+      Dedup.incrementalNearDupBands(c, probe, "doc_id", threshold, probeCap)
+    sources(batchId) match {
+      case srcs if srcs.size > 1 =>
+        srcs.map(one).reduce(_ unionByName _)
           .groupBy("doc_id")
           .agg(min("dup_of").as("dup_of"), max("best_jac").as("best_jac"))
+      case srcs => one(union(srcs))
     }
+  }
 
-  /** Admit one micro-batch: write verdicts and the survivors' band
-    * rows under `batch=<batchId>`. Idempotent per batchId. Repeated
-    * doc_ids within the batch are collapsed first (keeping one row):
-    * the strict `id_a < id_b` pair order means identical ids never
-    * pair, so without the guard BOTH copies would be admitted and the
-    * corpus index would double-count their band rows.
+  /** Repeated doc_ids within the batch are collapsed first (keeping
+    * one row): the strict `id_a < id_b` pair order means identical ids
+    * never pair, so without the guard BOTH copies would be admitted
+    * and the corpus index would double-count their band rows.
     */
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     val b = batch.dropDuplicates("doc_id")
     val sets = b.select(col("doc_id"),
       Dedup.tokenHashSet(col("text")).as("hs"))
     // bands and both verdict frames feed TWO actions (the verdicts
-    // write and the survivors write) — persist so the tokenize/
-    // MinHash/pair-join/corpus-probe lineage runs once per batch,
-    // not once per write
+    // write and the survivors write) — persisted so the tokenize/
+    // MinHash/pair-join/corpus-probe lineage runs once per batch
     val bands = Dedup.bandTable(sets, "doc_id", "hs", k, rowsPerBand)
-      .persist()
     // greedy in-batch self-dedup: a doc with ANY verified smaller-id
     // partner in the same batch is dropped (what a production gate
     // does — full transitive clustering per micro-batch buys little
@@ -137,61 +84,35 @@ final class IngestGate(spark: SparkSession, stateDir: String,
       k, rowsPerBand, threshold)
       .groupBy(col("id_b").as("doc_id"))
       .agg(min("id_a").as("dup_of"), max("jac").as("best_jac"))
-      .persist()
     val probe = bands.join(inDup.select("doc_id"), Seq("doc_id"), "left_anti")
-    val corpDup = corpusDupVerdicts(batchId, probe).persist()
-    try { applyBatchWrites(b, batchId, inDup, corpDup, probe) }
-    finally { bands.unpersist(); inDup.unpersist(); corpDup.unpersist() }
-  }
-
-  private def applyBatchWrites(batch: DataFrame, batchId: Long,
-      inDup: DataFrame, corpDup: DataFrame, probe: DataFrame): Unit = {
-    val verdicts = batch.select(col("doc_id"))
-      .join(inDup.withColumnRenamed("dup_of", "dup_in")
-        .withColumnRenamed("best_jac", "jac_in"), Seq("doc_id"), "left")
-      .join(corpDup.withColumnRenamed("dup_of", "dup_corp")
-        .withColumnRenamed("best_jac", "jac_corp"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("dup_in").isNotNull, lit("dup_in_batch"))
-          .when(col("dup_corp").isNotNull, lit("dup_of_corpus"))
-          .otherwise(lit("admitted")).as("verdict"),
-        coalesce(col("dup_in"), col("dup_corp")).as("dup_of"),
-        coalesce(col("jac_in"), col("jac_corp")).as("best_jac"))
-    val survivors = probe.join(
-      corpDup.select("doc_id"), Seq("doc_id"), "left_anti")
-    // verdicts first: a crash between the writes leaves a replayable
-    // batch (corpus filter excludes the partial partition), never a
-    // corpus row without its verdict
+    val corpDup = corpusDupVerdicts(batchId, probe)
     val obs = org.apache.spark.sql.Observation(
       s"gate-$batchId-${System.nanoTime()}")
     // coalesce: sum over an EMPTY batch is null, not 0
     def cnt(v: String) =
       coalesce(sum(when(col("verdict") === v, 1L).otherwise(0L)), lit(0L)).as(v)
-    verdicts.observe(obs, cnt("admitted"), cnt("dup_in_batch"),
-        cnt("dup_of_corpus"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${store.verdictsDir}/batch=$batchId")
+    commit(batchId, bands, inDup, corpDup) {
+      b.select(col("doc_id"))
+        .join(inDup.withColumnRenamed("dup_of", "dup_in")
+          .withColumnRenamed("best_jac", "jac_in"), Seq("doc_id"), "left")
+        .join(corpDup.withColumnRenamed("dup_of", "dup_corp")
+          .withColumnRenamed("best_jac", "jac_corp"), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          when(col("dup_in").isNotNull, lit("dup_in_batch"))
+            .when(col("dup_corp").isNotNull, lit("dup_of_corpus"))
+            .otherwise(lit("admitted")).as("verdict"),
+          coalesce(col("dup_in"), col("dup_corp")).as("dup_of"),
+          coalesce(col("jac_in"), col("jac_corp")).as("best_jac"))
+        .observe(obs, cnt("admitted"), cnt("dup_in_batch"),
+          cnt("dup_of_corpus"))
+        .coalesce(1)
+    }(_ => probe.join(corpDup.select("doc_id"), Seq("doc_id"), "left_anti"))
     val m = obs.get
     lastStatsVar = Some(GateStats(batchId,
       m("admitted").asInstanceOf[Long],
       m("dup_in_batch").asInstanceOf[Long],
       m("dup_of_corpus").asInstanceOf[Long]))
-    survivors.write.mode("overwrite")
-      .parquet(s"${store.dataDir}/batch=$batchId")
   }
-
-  /** All verdicts so far, with the `batch` partition column. */
-  def readVerdicts(): DataFrame =
-    spark.read.option("basePath", store.verdictsDir)
-      .parquet(store.verdictsDir)
-
-  /** Start the gate over a streaming `(doc_id, text)` frame, with
-    * optional in-loop maintenance every n batches —
-    * [[GateStateStore.start]].
-    */
-  def start(docs: DataFrame, checkpointDir: String,
-      compactEvery: Int = 0): StreamingQuery =
-    store.start(docs, checkpointDir, compactEvery)(applyBatch)
 }
 
 object IngestGate {

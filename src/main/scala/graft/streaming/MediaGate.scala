@@ -1,116 +1,54 @@
 package graft.streaming
 
 import graft.ops.Multimodal
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming PERCEPTUAL media-dedup gate — [[Multimodal.imageDHash]]
-  * recast incrementally on the [[GateStateStore]] conventions: each
-  * micro-batch of (id, payload bytes) is decoded and dHashed, and an
-  * image is admitted iff it decodes, no smaller id in the same batch
-  * has its hash, and the hash is unseen by any earlier batch. The
-  * admitted hashes (16 bytes an image — no pixels, no payload ever
-  * persists) become standing state, so a brightness-shifted or
-  * losslessly re-encoded copy of ANY previously admitted image is
-  * rejected in every later batch even though its bytes are new —
-  * the gate content-hash dedup cannot be.
+  * recast incrementally: each micro-batch of (id, payload bytes) is
+  * decoded and dHashed, so a brightness-shifted or losslessly
+  * re-encoded copy of ANY previously admitted image is rejected in
+  * every later batch even though its bytes are new — the gate
+  * content-hash dedup cannot be. Pixels never leave the task; only
+  * the 16-byte hash row shuffles.
   *
-  * Per-image verdicts: `admitted` / `dup_in_batch` /
-  * `dup_of_corpus` / `rejected` (undecodable — the DLQ branch).
+  * Key and fold: `seen/` holds admitted `(hash_hi, hash_lo)` pairs,
+  * one row per hash, bucketed by `hash_lo` — no pixels, no payload
+  * persists.
   *
-  * State layout under `stateDir` (the shared conventions —
-  * overwrite-idempotent Hive partitions, `batch < n` replay guard,
-  * META-committed hash-bucketed base, vacuum):
-  * {{{
-  *   seen/batch=<n>/      admitted (hash_hi, hash_lo) pairs
-  *   base/gen=<g>/        compacted seen-set bucketed by hash_lo
-  *   base/META.<g>        "<gen> <upTo>" — create-no-overwrite commit
-  *   verdicts/batch=<n>/  (id, hash_hi, hash_lo, verdict)
-  * }}}
-  *
-  * Scale shape: per batch, one decode pass over the BATCH only
-  * (pixels never leave the task — only the 16-byte hash row
-  * shuffles), one batch-local min-id claim, and one membership
-  * semi-join against the stored seen-set (bucket-pruned after
-  * [[compact]]). A dHash collision suppresses an admit — it never
-  * re-admits; conservative for a dedup gate.
+  * Verdicts `(id, hash_hi, hash_lo, verdict)`: `rejected`
+  * (undecodable — the DLQ branch), `dup_of_corpus` (hash admitted by
+  * an earlier batch), `dup_in_batch` (a smaller id of this batch has
+  * the hash), else `admitted`. A dHash collision suppresses an
+  * admit — it never re-admits; conservative for a dedup gate.
   */
 final class MediaGate(spark: SparkSession, stateDir: String,
-    numBuckets: Int = 32) {
+    numBuckets: Int = 32) extends StandingGate[(Long, Array[Byte])](
+    spark, stateDir, "seen", "graft_mediagate_base",
+    "hash_hi BIGINT, hash_lo BIGINT", "hash_lo", numBuckets) {
 
-  private val seenSchema = StructType(Seq(
-    StructField("hash_hi", LongType), StructField("hash_lo", LongType)))
-
-  // fold semantics: one row per distinct hash; min(batch) keeps the
-  // `batch < n` replay filter monotone across folds
-  private val store = new GateStateStore(spark, stateDir,
-    dataSubdir = "seen", tablePrefix = "graft_mediagate_base",
-    dataSchema = seenSchema, bucketCol = "hash_lo",
-    numBuckets = numBuckets,
-    foldMerge = _.groupBy("hash_hi", "hash_lo")
-      .agg(min("batch").as("batch")))
-
-  /** [[GateStateStore.compact]] with the distinct-keep-min fold. */
-  def compact(currentBatchId: Long = Long.MaxValue): Long =
-    store.compact(currentBatchId)
-
-  /** Reclaim unreachable state — [[GateStateStore.vacuum]]. */
-  def vacuum(currentBatchId: Long): Int = store.vacuum(currentBatchId)
-
-  /** The compacted seen-set, if a compaction has committed. */
-  def baseIndex(): Option[DataFrame] = store.baseIndex()
-
-  /** Hashes admitted strictly before `batchId`. */
-  def seenHashes(batchId: Long): DataFrame = store.sourcesUnion(batchId)
-
-  /** Gate one micro-batch of (id, payload): write per-image verdicts
-    * and the admitted hashes under `batch=<batchId>`. Idempotent per
-    * batchId (partition overwrite).
-    */
   def applyBatch(batch: Dataset[(Long, Array[Byte])],
       batchId: Long): Unit = {
     val hashed = Multimodal.imageDHash(batch.dropDuplicates("_1"))
       .toDF()
       .withColumnRenamed("doc_id", "id")
-    hashed.persist()
-    try {
+    val key = Seq("hash_hi", "hash_lo")
+    commit(batchId, hashed) {
       val valid = hashed.filter(col("status") === "ok")
-      val claims = valid.groupBy("hash_hi", "hash_lo")
+      val claims = valid.groupBy(key.map(col): _*)
         .agg(min("id").as("__keeper"))
-      val seen = valid.select("hash_hi", "hash_lo").distinct()
-        .join(seenHashes(batchId), Seq("hash_hi", "hash_lo"),
-          "left_semi")
-      val verdicts = hashed
-        .join(claims, Seq("hash_hi", "hash_lo"), "left")
-        .join(seen.withColumn("__seen", lit(true)),
-          Seq("hash_hi", "hash_lo"), "left")
+      val seen = valid.select(key.map(col): _*).distinct()
+        .join(standing(batchId), key, "left_semi")
+      hashed
+        .join(claims, key, "left")
+        .join(seen.withColumn("__seen", lit(true)), key, "left")
         .select(col("id"), col("hash_hi"), col("hash_lo"),
           when(col("status") =!= "ok", lit("rejected"))
             .when(coalesce(col("__seen"), lit(false)),
               lit("dup_of_corpus"))
             .when(col("id") =!= col("__keeper"), lit("dup_in_batch"))
             .otherwise(lit("admitted")).as("verdict"))
-      verdicts.write.mode("overwrite")
-        .parquet(s"${store.verdictsDir}/batch=$batchId")
-      // admitted hashes become standing state (verdicts first — a
-      // crash between the writes leaves a replayable batch; explicit
-      // schema so an empty micro-batch's part-file-less directory
-      // reads as empty instead of failing schema inference)
-      store.readBackVerdicts(batchId, verdicts.schema)
-        .filter(col("verdict") === "admitted")
-        .select("hash_hi", "hash_lo").distinct()
-        .write.mode("overwrite")
-        .parquet(s"${store.dataDir}/batch=$batchId")
-      ()
-    } finally hashed.unpersist()
+    } { _.filter(col("verdict") === "admitted")
+      .select("hash_hi", "hash_lo").distinct() }
   }
-
-  /** Verdicts of batches <= upTo (replay-guard filtered). */
-  def readVerdicts(upTo: Long): DataFrame =
-    spark.read.option("basePath", store.verdictsDir)
-      .parquet(store.verdictsDir)
-      .filter(col("batch") <= upTo)
-      .select(col("id"), col("batch").cast("long").as("batch"),
-        col("hash_hi"), col("hash_lo"), col("verdict"))
 }

@@ -1,106 +1,59 @@
 package graft.streaming
 
 import graft.ops.{Dedup, Multimodal}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming perceptual NEAR-dup media gate — [[MediaGate]]'s
   * standing seen-set upgraded from exact-hash membership to
-  * guaranteed-recall Hamming-≤6 matching, incrementally on the
-  * [[GateStateStore]] conventions: each micro-batch of (id, payload
-  * bytes) is decoded and dHashed; an image is admitted iff it
-  * decodes, is not within Hamming 6 of any PREVIOUSLY admitted hash
-  * (`dup_of_corpus`), and is the min-id canonical of its batch-local
-  * near-dup component (`dup_in_batch` otherwise — components over
-  * the ≤6 pair graph, so a chain of small edits collapses to one
-  * admit per batch). A re-encode, brightness shift, OR a few-bit
-  * perceptual edit of admitted content is rejected in every later
-  * batch.
+  * guaranteed-recall Hamming-≤6 matching: a re-encode, brightness
+  * shift, OR a few-bit perceptual edit of admitted content is
+  * rejected in every later batch.
   *
-  * State layout is the production probe shape: admitted hashes
-  * persist BANDED — four (bi, bv, hash_hi, hash_lo) rows per hash,
-  * the 16-bit bands of [[Multimodal.dhashBandProbeCandidates]] —
-  * bucketed by `bv`, so the corpus probe is an equi-join on
-  * (bi, bv) between the batch side expanded to its 17 radius-1
-  * values per band (the SMALL side carries the ×17 fan-out, 68 rows
-  * per image) and the bucket-pruned standing bands. Pigeonhole
-  * guarantees every standing hash within Hamming ≤ 7 of a batch
-  * hash surfaces as a candidate; the exact popcount ≤ 6 verifies.
-  * The full-state side is never scanned row-by-row against the
-  * batch and never carries an expansion.
+  * Key and fold: `seen/` holds each admitted hash BANDED — four
+  * (bi, bv, hash_hi, hash_lo) rows, the 16-bit bands of
+  * [[Multimodal.dhashBands]] — one row per distinct band row,
+  * bucketed by `bv`. The corpus probe is an equi-join on (bi, bv)
+  * between the batch side expanded to its 17 radius-1 values per band
+  * (the SMALL side carries the ×17 fan-out, 68 rows per image) and
+  * the bucket-pruned standing bands. Pigeonhole guarantees every
+  * standing hash within Hamming ≤ 7 of a batch hash surfaces as a
+  * candidate; the exact popcount ≤ 6 verifies. The standing side is
+  * never scanned row-by-row and never carries an expansion.
   *
-  * State under `stateDir` (shared conventions — overwrite-idempotent
-  * Hive partitions, `batch < n` replay guard, META-committed
-  * bucketed base, vacuum):
-  * {{{
-  *   seen/batch=<n>/      admitted band rows (bi, bv, hash_hi, hash_lo)
-  *   base/gen=<g>/        compacted band set bucketed by bv
-  *   base/META.<g>        "<gen> <upTo>" — create-no-overwrite commit
-  *   verdicts/batch=<n>/  (id, hash_hi, hash_lo, verdict)
-  * }}}
+  * Verdicts `(id, hash_hi, hash_lo, verdict)`: `rejected`
+  * (undecodable), `dup_of_corpus` (within Hamming 6 of a PREVIOUSLY
+  * admitted hash), `dup_in_batch` (not the min-id canonical of its
+  * batch-local near-dup component — components over the ≤6 pair
+  * graph, so a chain of small edits collapses to one admit per
+  * batch), else `admitted`.
   */
 final class NearDupMediaGate(spark: SparkSession, stateDir: String,
-    numBuckets: Int = 32) {
+    numBuckets: Int = 32) extends StandingGate[(Long, Array[Byte])](
+    spark, stateDir, "seen", "graft_neardupgate_base",
+    "bi INT, bv BIGINT, hash_hi BIGINT, hash_lo BIGINT", "bv",
+    numBuckets) {
 
-  private val bandSchema = StructType(Seq(
-    StructField("bi", IntegerType), StructField("bv", LongType),
-    StructField("hash_hi", LongType), StructField("hash_lo", LongType)))
-
-  private val store = new GateStateStore(spark, stateDir,
-    dataSubdir = "seen", tablePrefix = "graft_neardupgate_base",
-    dataSchema = bandSchema, bucketCol = "bv",
-    numBuckets = numBuckets,
-    foldMerge = _.groupBy("bi", "bv", "hash_hi", "hash_lo")
-      .agg(min("batch").as("batch")))
-
-  def compact(currentBatchId: Long = Long.MaxValue): Long =
-    store.compact(currentBatchId)
-
-  def vacuum(currentBatchId: Long): Int = store.vacuum(currentBatchId)
-
-  def baseIndex(): Option[DataFrame] = store.baseIndex()
-
-  /** Admitted band rows of batches strictly before `batchId`. */
-  def seenBands(batchId: Long): DataFrame = store.sourcesUnion(batchId)
-
-  /** The four 16-bit bands — the ONE shared layout
-    * ([[Multimodal.dhashBands]]): state written here must match the
-    * probe generator the recall oracle prices.
-    */
-  private def bandsOf(df: DataFrame, extra: Seq[String]): DataFrame =
-    Multimodal.dhashBands(df, extra)
-
-  private def hamming(hiA: String, loA: String, hiB: String,
-      loB: String) =
-    (bit_count(col(hiA).bitwiseXOR(col(hiB))) +
-      bit_count(col(loA).bitwiseXOR(col(loB)))).cast("long")
-
-  /** Gate one micro-batch of (id, payload): write per-image verdicts
-    * and the admitted hashes' band rows under `batch=<batchId>`.
-    * Idempotent per batchId (partition overwrite).
-    */
   def applyBatch(batch: Dataset[(Long, Array[Byte])],
       batchId: Long): Unit = {
     val hashed = Multimodal.imageDHash(batch.dropDuplicates("_1"))
       .toDF()
       .withColumnRenamed("doc_id", "id")
-    hashed.persist()
-    try {
+    commit(batchId, hashed) {
       val valid = hashed.filter(col("status") === "ok")
       // corpus probe: batch bands expanded by the 17 radius-1 masks
       // per band, equi-joined against the standing EXACT bands —
       // every admitted hash within Hamming <= 7 surfaces, the
       // popcount verifies <= 6
-      val masks = Multimodal.radius1Masks16
-      val probe = bandsOf(valid, Seq("id"))
-        .withColumn("__m", explode(masks))
+      val probe = Multimodal.dhashBands(valid, Seq("id"))
+        .withColumn("__m", explode(Multimodal.radius1Masks16))
         .select(col("id"), col("bi"),
           col("bv").bitwiseXOR(col("__m")).as("bv"),
           col("hash_hi").as("qhi"), col("hash_lo").as("qlo"))
       val corpusDup = probe
-        .join(seenBands(batchId), Seq("bi", "bv"))
-        .filter(hamming("qhi", "qlo", "hash_hi", "hash_lo") <= 6L)
+        .join(standing(batchId), Seq("bi", "bv"))
+        .filter(Dedup.hamming128(col("qhi"), col("qlo"), col("hash_hi"),
+          col("hash_lo")) <= 6L)
         .select("id").distinct()
       val rem = valid.join(corpusDup.withColumnRenamed("id", "__cd"),
         col("id") === col("__cd"), "left_anti")
@@ -108,11 +61,12 @@ final class NearDupMediaGate(spark: SparkSession, stateDir: String,
       // the same multi-probe generator, batch-sized on both sides
       val pairs = Multimodal.dhashBandProbeCandidates(
           rem.select(col("id"), col("hash_hi"), col("hash_lo")))
-        .filter(hamming("ha", "la", "hb", "lb") <= 6L)
+        .filter(Dedup.hamming128(col("ha"), col("la"), col("hb"),
+          col("lb")) <= 6L)
         .select("id_a", "id_b")
       val comp = Dedup.connectedComponents(pairs, "id_a", "id_b")
         .withColumnRenamed("id", "__cid")
-      val verdicts = hashed
+      hashed
         .join(corpusDup.withColumn("__corpus", lit(true))
           .withColumnRenamed("id", "__cd2"),
           col("id") === col("__cd2"), "left")
@@ -124,27 +78,7 @@ final class NearDupMediaGate(spark: SparkSession, stateDir: String,
             .when(coalesce(col("comp"), col("id")) =!= col("id"),
               lit("dup_in_batch"))
             .otherwise(lit("admitted")).as("verdict"))
-      verdicts.write.mode("overwrite")
-        .parquet(s"${store.verdictsDir}/batch=$batchId")
-      // admitted hashes persist BANDED (verdicts first — a crash
-      // between the writes leaves a replayable batch; the readback
-      // carries the explicit schema so an EMPTY micro-batch, which
-      // writes a part-file-less directory, reads as empty instead of
-      // failing schema inference)
-      bandsOf(store.readBackVerdicts(batchId, verdicts.schema)
-          .filter(col("verdict") === "admitted")
-          .select("hash_hi", "hash_lo").distinct(), Nil)
-        .write.mode("overwrite")
-        .parquet(s"${store.dataDir}/batch=$batchId")
-      ()
-    } finally hashed.unpersist()
+    } { v => Multimodal.dhashBands(v.filter(col("verdict") === "admitted")
+      .select("hash_hi", "hash_lo").distinct(), Nil) }
   }
-
-  /** Verdicts of batches <= upTo (replay-guard filtered). */
-  def readVerdicts(upTo: Long): DataFrame =
-    spark.read.option("basePath", store.verdictsDir)
-      .parquet(store.verdictsDir)
-      .filter(col("batch") <= upTo)
-      .select(col("id"), col("batch").cast("long").as("batch"),
-        col("hash_hi"), col("hash_lo"), col("verdict"))
 }

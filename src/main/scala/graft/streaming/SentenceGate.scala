@@ -2,20 +2,18 @@ package graft.streaming
 
 import graft.functions.GraftFunctions.portableHash
 import graft.ops.Sentences
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming CCNet sentence-frequency gate —
   * [[graft.ops.Sentences.stripBoilerplate]] recast incrementally:
-  * each micro-batch's documents are segmented, every sentence's
-  * distinct-document frequency over EVERYTHING SEEN SO FAR (standing
-  * state plus the current batch) is computed, and sentences at or
-  * above `maxDocs` are stripped before the batch's cleaned texts are
-  * emitted. A cookie banner that enters the corpus in batch 3 and
-  * crosses the frequency floor in batch 9 starts vanishing from
-  * batch 9's documents onward — exactly the online form of the
-  * batch operator's verdict.
+  * each micro-batch's (doc_id, text) documents are segmented, every
+  * sentence's distinct-document frequency over EVERYTHING SEEN SO FAR
+  * (standing state plus the current batch) is computed, and sentences
+  * at or above `maxDocs` are stripped. A cookie banner that enters the
+  * corpus in batch 3 and crosses the frequency floor in batch 9 starts
+  * vanishing from batch 9's documents onward — exactly the online
+  * form of the batch operator's verdict.
   *
   * Batch and stream agree BY CONSTRUCTION: the gate segments with
   * the same [[Sentences.sentencesOf]] and counts per-document
@@ -23,85 +21,42 @@ import org.apache.spark.sql.types._
   * (doc_sentence_gate_e2e pins the two-batch composition against a
   * SQL re-statement of both batches).
   *
-  * State layout under `stateDir` (the [[GateStateStore]] conventions
-  * — overwrite-idempotent Hive partitions, `batch < n` replay guard,
-  * META-committed h-bucketed base, vacuum):
-  * {{{
-  *   counts/batch=<n>/    (h, nd): per-sentence-hash distinct-doc
-  *                        count contributed by batch n — 16 bytes a
-  *                        sentence, NO text ever persists in state
-  *   base/gen=<g>/        compacted counts bucketed by h (nd summed)
-  *   base/META.<g>        "<gen> <upTo>" — create-no-overwrite commit
-  *   verdicts/batch=<n>/  (doc_id, n_sentences, n_kept, n_dropped,
-  *                        text_kept)
-  * }}}
+  * Key and fold: `counts/` holds `(h, nd)` — the per-sentence-hash
+  * distinct-doc count each batch contributed, 16 bytes a sentence, NO
+  * text — and compaction SUMS nd per h. Counting is by SIGHT, not
+  * admission: every seen document's sentences count toward the floor
+  * whether or not earlier batches stripped them — frequency is
+  * evidence of boilerplate. Hash collisions (portableHash mod ~1e9)
+  * conflate two sentences' counts — conservative for a strip decision
+  * and shared verbatim by the oracle twin.
   *
-  * Counting is by SIGHT, not admission: every seen document's
-  * sentences count toward the floor whether or not earlier batches
-  * stripped them — frequency is evidence of boilerplate, and a
-  * sentence does not stop being boilerplate because the gate already
-  * strips it. Hash collisions (portableHash mod ~1e9) conflate two
-  * sentences' counts — conservative for a strip decision and shared
-  * verbatim by the oracle twin.
-  *
-  * Scale shape: per batch, one segmentation pass over the BATCH only
-  * (the corpus never re-segments), one batch-local distinct count,
-  * one semi-join-pruned probe of the standing counts (base side
-  * h-bucketed after [[compact]], so the big side scans without an
-  * Exchange), and a boiler-domain-sized anti-join for the strip.
+  * Verdicts `(doc_id, n_sentences, n_kept, n_dropped, text_kept)`:
+  * `text_kept` is order-preserving with the over-floor sentences
+  * stripped; a document stripped to nothing emits an empty
+  * `text_kept`, never disappears.
   */
 final class SentenceGate(spark: SparkSession, stateDir: String,
-    maxDocs: Long = 10L, numBuckets: Int = 32) {
+    maxDocs: Long = 10L, numBuckets: Int = 32)
+    extends StandingGate[Row](spark, stateDir, "counts",
+      "graft_sentgate_base", "h BIGINT, nd BIGINT", "h", numBuckets) {
   require(maxDocs >= 2L, s"need maxDocs >= 2, got $maxDocs")
 
-  private val countSchema = StructType(Seq(
-    StructField("h", LongType), StructField("nd", LongType)))
+  override protected def fold(rows: DataFrame): DataFrame =
+    rows.groupBy("h").agg(sum(col("nd")).as("nd"),
+      min(col("batch")).as("batch"))
 
-  // fold semantics: SUM nd per hash; min(batch) keeps the `batch < n`
-  // replay filter monotone across folds
-  private val store = new GateStateStore(spark, stateDir,
-    dataSubdir = "counts", tablePrefix = "graft_sentgate_base",
-    dataSchema = countSchema, bucketCol = "h", numBuckets = numBuckets,
-    foldMerge = _.groupBy("h").agg(sum(col("nd")).as("nd"),
-      min(col("batch")).as("batch")))
-
-  /** Fold count partitions into the next h-bucketed base generation,
-    * SUMMING nd per hash — [[GateStateStore.compact]].
-    */
-  def compact(currentBatchId: Long = Long.MaxValue): Long =
-    store.compact(currentBatchId)
-
-  /** Reclaim unreachable state — [[GateStateStore.vacuum]]. */
-  def vacuum(currentBatchId: Long): Int = store.vacuum(currentBatchId)
-
-  /** Standing (h, nd) contributions from batches strictly before
-    * `batchId`: the compacted base plus not-yet-folded recent
-    * partitions. May hold several rows per h (one per unfolded
-    * batch) — callers sum AFTER probe-pruning. Empty first batch.
-    */
-  def standingCounts(batchId: Long): DataFrame = store.sourcesUnion(batchId)
-
-  /** Gate one micro-batch of (doc_id, text): write per-doc verdicts
-    * (order-preserving `text_kept` with the over-floor sentences
-    * stripped) and the batch's per-hash distinct-doc counts under
-    * `batch=<batchId>`. Idempotent per batchId (partition
-    * overwrite). A document stripped to nothing emits an empty
-    * `text_kept`, never disappears.
-    */
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     val b = batch.dropDuplicates("doc_id")
     val ex = b.select(col("doc_id"),
         posexplode(Sentences.sentencesOf(col("text")))
           .as(Seq("pos", "s")))
       .withColumn("h", portableHash(col("s")))
-    ex.persist()
-    try {
-      val batchCounts = ex.select(col("doc_id"), col("h")).distinct()
-        .groupBy("h").agg(count(lit(1)).as("nd"))
-      batchCounts.persist()
+    val batchCounts = ex.select(col("doc_id"), col("h")).distinct()
+      .groupBy("h").agg(count(lit(1)).as("nd"))
+    commit(batchId, ex, batchCounts) {
       // probe-pruned standing sum: the semi-join keeps the bucketed
       // base side Exchange-free and the re-aggregation batch-sized
-      val prior = standingCounts(batchId)
+      val prior = standing(batchId)
         .join(batchCounts.select("h"), Seq("h"), "left_semi")
         .groupBy("h").agg(sum(col("nd")).as("__prior"))
       val boiler = batchCounts.join(prior, Seq("h"), "left")
@@ -115,7 +70,7 @@ final class SentenceGate(spark: SparkSession, stateDir: String,
             x => x.getField("s")), " ").as("text_kept"))
       val totals = ex.groupBy("doc_id")
         .agg(count(lit(1)).as("__n"))
-      val verdicts = b.select(col("doc_id"))
+      b.select(col("doc_id"))
         .join(totals, Seq("doc_id"), "left")
         .join(kept, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -124,28 +79,6 @@ final class SentenceGate(spark: SparkSession, stateDir: String,
           (coalesce(col("__n"), lit(0L)) -
             coalesce(col("n_kept"), lit(0L))).as("n_dropped"),
           coalesce(col("text_kept"), lit("")).as("text_kept"))
-      verdicts.write.mode("overwrite")
-        .parquet(s"${store.verdictsDir}/batch=$batchId")
-      batchCounts.write.mode("overwrite")
-        .parquet(s"${store.dataDir}/batch=$batchId")
-      batchCounts.unpersist()
-      ()
-    } finally ex.unpersist()
+    }(_ => batchCounts)
   }
-
-  /** Production wiring with optional in-loop maintenance —
-    * [[GateStateStore.start]].
-    */
-  def start(docs: DataFrame, checkpointDir: String,
-      compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    store.start(docs, checkpointDir, compactEvery)(applyBatch)
-
-  /** Verdicts of batches <= upTo (replay-guard filtered). */
-  def readVerdicts(upTo: Long): DataFrame =
-    spark.read.option("basePath", store.verdictsDir)
-      .parquet(store.verdictsDir)
-      .filter(col("batch") <= upTo)
-      .select(col("doc_id"), col("batch").cast("long").as("batch"),
-        col("n_sentences"), col("n_kept"), col("n_dropped"),
-        col("text_kept"))
 }

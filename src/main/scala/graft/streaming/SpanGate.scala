@@ -1,20 +1,16 @@
 package graft.streaming
 
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming SUBSTRING-dedup ingest gate — [[graft.ops.Dedup.dupSpans]]
-  * recast incrementally: each micro-batch of documents is scored for
-  * duplicated-span coverage against (a) the STANDING corpus of
-  * admitted documents' window hashes and (b) itself (a window
-  * repeated within the batch, including within one document), and a
-  * document whose covered-token fraction exceeds `maxDupFrac` is
-  * rejected. Admitted documents' distinct window hashes become corpus
-  * state for every later batch — so the standing corpus maintains the
-  * invariant "no admitted document overlaps an earlier admitted one
-  * by a full w-window beyond the tolerated fraction".
+  * recast incrementally: each micro-batch of (doc_id, text) is scored
+  * for duplicated-span coverage against the standing window hashes
+  * and against itself (a window repeated within the batch, including
+  * within one document). The standing corpus keeps the invariant "no
+  * admitted document overlaps an earlier admitted one by a full
+  * w-window beyond the tolerated fraction".
   *
   * Batch and stream agree on span geometry BY CONSTRUCTION: the gate
   * calls the same [[Dedup.windowHashes]] front half and
@@ -22,74 +18,30 @@ import org.apache.spark.sql.types._
   * (doc_span_gate_e2e pins the composition against a SQL re-statement
   * of both batches).
   *
-  * State layout under `stateDir` (the [[GateStateStore]] conventions
-  * — overwrite-idempotent Hive partitions, `batch < n` replay guard,
-  * META-committed h-bucketed base, vacuum):
-  * {{{
-  *   hashes/batch=<n>/    admitted docs' DISTINCT window hashes (h)
-  *   base/gen=<g>/        compacted hash index bucketed by h
-  *   base/META.<g>        "<gen> <upTo>" — create-no-overwrite commit
-  *   verdicts/batch=<n>/  (doc_id, n_toks, dup_toks, dup_frac, admitted)
-  * }}}
+  * Key and fold: `hashes/` holds admitted docs' DISTINCT window hashes
+  * `h`, one row per h — O(distinct windows of admitted docs), 8 bytes
+  * a window before parquet encoding; the corpus is never
+  * re-tokenized.
   *
-  * Scale shape: per batch, one window explode over the BATCH only
-  * (the corpus is never re-tokenized), one batch-local hash count,
-  * and one membership semi-join against the stored hash index — the
-  * corpus side is h-bucketed after [[compact]], so the big side of
-  * the probe scans without an Exchange and only the batch side
-  * shuffles. Corpus state is O(distinct windows of admitted docs) —
-  * 8 bytes per window before parquet encoding.
+  * Verdicts `(doc_id, n_toks, dup_toks, dup_frac, admitted)`: a
+  * document whose covered-token fraction exceeds `maxDupFrac` is
+  * rejected. A document shorter than w tokens has zero windows, zero
+  * duplicated coverage, and is always admitted.
   */
 final class SpanGate(spark: SparkSession, stateDir: String,
-    w: Int = 16, maxDupFrac: Double = 0.5, numBuckets: Int = 32) {
+    w: Int = 16, maxDupFrac: Double = 0.5, numBuckets: Int = 32)
+    extends StandingGate[Row](spark, stateDir, "hashes",
+      "graft_spangate_base", "h BIGINT", "h", numBuckets) {
   require(w > 0 && maxDupFrac >= 0.0 && maxDupFrac <= 1.0,
     "need w > 0 and maxDupFrac in [0, 1]")
 
-  private val hashSchema = StructType(Seq(StructField("h", LongType)))
-
-  // fold semantics: a hash admitted by two batches needs one row;
-  // keep the SMALLEST batch id so `batch < n` filters stay monotone
-  // across folds
-  private val store = new GateStateStore(spark, stateDir,
-    dataSubdir = "hashes", tablePrefix = "graft_spangate_base",
-    dataSchema = hashSchema, bucketCol = "h", numBuckets = numBuckets,
-    foldMerge = _.groupBy("h").agg(min("batch").as("batch")))
-
-  /** Fold hash partitions into the next h-bucketed base generation —
-    * [[GateStateStore.compact]] with the distinct-keep-min-batch fold.
-    */
-  def compact(currentBatchId: Long = Long.MaxValue): Long =
-    store.compact(currentBatchId)
-
-  /** Reclaim unreachable state — [[GateStateStore.vacuum]]. */
-  def vacuum(currentBatchId: Long): Int = store.vacuum(currentBatchId)
-
-  /** The compacted base hash index, if a compaction has committed —
-    * the h-bucketed big side of the probe join.
-    */
-  def baseIndex(): Option[DataFrame] = store.baseIndex()
-
-  /** Distinct window hashes admitted by batches strictly before
-    * `batchId`: the compacted base (h-bucketed — the probe join scans
-    * it without a corpus-side Exchange) unioned with not-yet-folded
-    * recent partitions. Empty on the first batch.
-    */
-  def corpusHashes(batchId: Long): DataFrame = store.sourcesUnion(batchId)
-
-  /** Admit one micro-batch of (doc_id, text): write per-doc verdicts
-    * and the admitted docs' distinct window hashes under
-    * `batch=<batchId>`. Idempotent per batchId (partition overwrite).
-    * A document shorter than w tokens has zero windows, zero
-    * duplicated coverage, and is always admitted.
-    */
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     val b = batch.dropDuplicates("doc_id")
-    val docs = b.select(col("doc_id"),
-      size(graft.functions.GraftFunctions.tokens(col("text")))
-        .cast("long").as("n_toks"))
     val wins = Dedup.windowHashes(b, col("doc_id"), col("text"), w)
-    wins.persist()
-    try {
+    commit(batchId, wins) {
+      val docs = b.select(col("doc_id"),
+        size(graft.functions.GraftFunctions.tokens(col("text")))
+          .cast("long").as("n_toks"))
       // duplicated = repeated within the batch OR present in the
       // corpus. Membership via TWO semi-joins (batch side probes the
       // h-bucketed corpus; never a distinct over the corpus-sized
@@ -97,45 +49,23 @@ final class SpanGate(spark: SparkSession, stateDir: String,
       // every batch), then a batch-sized dedup of the hit positions.
       val inBatch = wins.groupBy("h").agg(count(lit(1)).as("__n"))
         .filter(col("__n") > 1).select("h")
-      val hits = wins.join(corpusHashes(batchId), Seq("h"), "left_semi")
+      val hits = wins.join(standing(batchId), Seq("h"), "left_semi")
         .unionByName(wins.join(inBatch, Seq("h"), "left_semi"))
         .select(col("id"), col("s")).distinct()
-      val spans = Dedup.mergeWindowSpans(hits, w)
-      val perDoc = spans.groupBy(col("id").as("doc_id"))
+      val perDoc = Dedup.mergeWindowSpans(hits, w)
+        .groupBy(col("id").as("doc_id"))
         .agg(sum(col("span_len_toks")).as("dup_toks"))
-      val verdicts = docs
-        .join(perDoc, Seq("doc_id"), "left")
+      docs.join(perDoc, Seq("doc_id"), "left")
         .withColumn("dup_toks", coalesce(col("dup_toks"), lit(0L)))
         .withColumn("dup_frac",
           when(col("n_toks") > 0,
             col("dup_toks").cast("double") / col("n_toks").cast("double"))
             .otherwise(lit(0.0d)))
         .withColumn("admitted", col("dup_frac") <= maxDupFrac)
-      verdicts.write.mode("overwrite")
-        .parquet(s"${store.verdictsDir}/batch=$batchId")
-      // admitted docs' distinct hashes become corpus state
-      val admitted = spark.read
-        .parquet(s"${store.verdictsDir}/batch=$batchId")
-        .filter(col("admitted")).select("doc_id")
+    } { v =>
+      val admitted = v.filter(col("admitted")).select("doc_id")
       wins.join(admitted, wins("id") === admitted("doc_id"))
         .select("h").distinct()
-        .write.mode("overwrite")
-        .parquet(s"${store.dataDir}/batch=$batchId")
-    } finally wins.unpersist()
+    }
   }
-
-  /** Production wiring with optional in-loop maintenance —
-    * [[GateStateStore.start]].
-    */
-  def start(docs: DataFrame, checkpointDir: String,
-      compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    store.start(docs, checkpointDir, compactEvery)(applyBatch)
-
-  /** Verdicts of batches <= upTo (replay-guard filtered). */
-  def readVerdicts(upTo: Long): DataFrame =
-    spark.read.option("basePath", store.verdictsDir)
-      .parquet(store.verdictsDir)
-      .filter(col("batch") <= upTo)
-      .select(col("doc_id"), col("batch").cast("long").as("batch"),
-        col("n_toks"), col("dup_toks"), col("dup_frac"), col("admitted"))
 }

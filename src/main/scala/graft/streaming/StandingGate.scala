@@ -1,57 +1,77 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
-/** The standing-state conventions shared by every streaming gate
-  * ([[IngestGate]], [[SpanGate]], [[SentenceGate]]) — extracted once
-  * so the next filesystem or commit-protocol edge case (like the
-  * java.io.File probe caught in round 6) gets fixed in one place:
+/** The base of every streaming gate: [[UrlGate]], [[SpanGate]],
+  * [[SentenceGate]], [[MediaGate]], [[NearDupMediaGate]],
+  * [[VideoGate]] and [[IngestGate]]. A gate admits or rejects each
+  * item of a micro-batch against the STANDING state every earlier
+  * batch admitted, and gets effectively-once admission from
+  * at-least-once micro-batches the foreachBatch way: per-batch-id
+  * overwrite plus a replay guard. A gate supplies only its state
+  * schema (`stateDdl`), its key (`bucketCol`), its [[fold]] and its
+  * verdict rule ([[applyBatch]] through [[commit]]); this class owns
+  * the layout, the commit order, compaction and vacuum.
   *
-  *   - `<data>/batch=<n>/` overwrite-idempotent Hive partitions: a
-  *     replayed batch OVERWRITES its own directory, and every
-  *     standing-state read filters `batch < n`, so a half-written
-  *     previous attempt is neither probed nor double-counted —
-  *     effectively-once without a manifest.
-  *   - `base/gen=<g>/` + `base/META.<g>` ("<gen> <upTo>"): the
-  *     compacted base, BUCKETED by the probe key and registered in
-  *     the session catalog so the big side of every probe join scans
-  *     with NO Exchange. The commit point is the CREATE-NO-OVERWRITE
-  *     of the monotonic `META.<g>` generation file, resolved on read
-  *     by max generation — no delete, no rename, no window in which
-  *     a crash leaves the store looking never-compacted (the round-16
-  *     delete-then-rename scheme had exactly that silent-data-loss
-  *     window). On an object store the exclusive create IS the
-  *     conditional-put ("if-none-match") seam, like the CDC manifest
-  *     head. Each gen dir also carries `_UPTO` (written after the
-  *     fold completes, before the META commit) so a lost or torn
-  *     META file is RECOVERABLE from the newest complete generation
-  *     instead of silently resetting to gen 0.
+  * State layout under `stateDir`:
+  * {{{
+  *   <data>/batch=<n>/    the state rows batch n admitted
+  *   base/gen=<g>/        compacted state, bucketed by the key
+  *   base/META.<g>        "<gen> <upTo>": create-no-overwrite commit
+  *   verdicts/batch=<n>/  batch n's per-item verdicts
+  * }}}
+  *
+  *   - per-batch commit ([[commit]]): overwrite `verdicts/batch=<n>`,
+  *     read it back with the written schema, derive the state rows,
+  *     overwrite `<data>/batch=<n>`. Verdicts first: a crash between
+  *     the writes leaves a replayable batch, never a state row without
+  *     its verdict. A replayed batch OVERWRITES its own directories,
+  *     and every standing-state read filters `batch < n`, so a
+  *     half-written previous attempt is neither probed nor
+  *     double-counted — effectively-once without a manifest.
+  *     [[readVerdicts]] filters `batch <= upTo`, so verdict dirs of a
+  *     rolled-back attempt stay invisible until [[vacuum]] removes
+  *     them.
+  *   - `base/gen=<g>/` + `base/META.<g>`: the compacted base,
+  *     BUCKETED by the key and registered in the session catalog so
+  *     the big side of every probe join scans with NO Exchange. The
+  *     commit point is the CREATE-NO-OVERWRITE of the monotonic
+  *     `META.<g>` generation file, resolved on read by max generation
+  *     — no delete, no rename, no window in which a crash leaves the
+  *     store looking never-compacted (the round-16 delete-then-rename
+  *     scheme had exactly that silent-data-loss window). On an object
+  *     store the exclusive create IS the conditional-put
+  *     ("if-none-match") seam, like the CDC manifest head. Each gen
+  *     dir also carries `_UPTO` (written after the fold completes,
+  *     before the META commit) so a lost or torn META file is
+  *     RECOVERABLE from the newest complete generation instead of
+  *     silently resetting to gen 0.
   *   - compaction folds every batch partition strictly below
   *     `min(max id present, currentBatchId)` — the newest partition
   *     never folds (it is the only one a stream restart can replay),
   *     and the caller's committed position keeps an orphaned
   *     future-id dir from inflating the watermark. Idempotent and
-  *     crash-safe: a crash before the META rename leaves the old
+  *     crash-safe: a crash before the META commit leaves the old
   *     generation live, a crash after leaves folded dirs the reads
   *     ignore and [[vacuum]] reclaims.
   *   - vacuum removes folded data dirs, data/verdict dirs beyond the
   *     committed high-water mark, and superseded generations (their
   *     catalog entries too).
   *
-  * `dataSchema` lists the gate's state columns WITHOUT the `batch`
-  * partition column; `foldMerge` is the gate's fold semantics over
-  * (dataSchema ++ batch) rows — identity for an append-only index,
-  * a per-key sum/min re-aggregation for counting state.
+  * `stateDdl` lists the state columns WITHOUT the `batch` partition
+  * column, as a Spark DDL string (`"h BIGINT"`).
   */
-private[streaming] final class GateStateStore(spark: SparkSession,
-    stateDir: String, dataSubdir: String, tablePrefix: String,
-    dataSchema: StructType, bucketCol: String, numBuckets: Int,
-    foldMerge: DataFrame => DataFrame = identity) {
+abstract class StandingGate[T](spark: SparkSession, stateDir: String,
+    dataSubdir: String, tablePrefix: String, stateDdl: String,
+    bucketCol: String, numBuckets: Int) {
 
-  val dataDir = s"$stateDir/$dataSubdir"
-  val verdictsDir = s"$stateDir/verdicts"
+  private val dataSchema = StructType.fromDDL(stateDdl)
+
+  private[streaming] val dataDir = s"$stateDir/$dataSubdir"
+  private val verdictsDir = s"$stateDir/verdicts"
   private val baseDir = s"$stateDir/base"
   // pre-round-17 single-file commit point, still READ for state dirs
   // written by the old scheme (never written again; vacuum retires it
@@ -74,7 +94,7 @@ private[streaming] final class GateStateStore(spark: SparkSession,
       .map(_.stripPrefix(prefix).toLong)
   }
 
-  def dataBatchIds(): Seq[Long] = listIds(dataDir, "batch=")
+  private def dataBatchIds(): Seq[Long] = listIds(dataDir, "batch=")
 
   // only well-formed META.<digits> names are generation files — a
   // stray META.tmp from the retired rename scheme must not crash the
@@ -151,7 +171,7 @@ private[streaming] final class GateStateStore(spark: SparkSession,
     * with neither marker (a fold that crashed mid-write, nothing
     * committed, every batch dir still live) fall through to (0, 0).
     */
-  def readMeta(): (Long, Long) = {
+  private[streaming] def readMeta(): (Long, Long) = {
     val metaGens = listMetaGens()
     if (metaGens.nonEmpty) {
       val g = metaGens.max
@@ -240,13 +260,11 @@ private[streaming] final class GateStateStore(spark: SparkSession,
     * bucketed table if this session's catalog has not seen it (a
     * fresh session reading existing state).
     */
-  def baseTable(gen: Long): DataFrame = {
+  private def baseTable(gen: Long): DataFrame = {
     val tbl = baseTableName(gen)
     if (!spark.catalog.tableExists(tbl)) {
-      val cols = (dataSchema.fields.map(f =>
-        s"${f.name} ${f.dataType.sql}") :+ "batch BIGINT").mkString(", ")
       spark.sql(
-        s"""CREATE TABLE $tbl ($cols)
+        s"""CREATE TABLE $tbl ($stateDdl, batch BIGINT)
            |USING PARQUET
            |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
            |  INTO $numBuckets BUCKETS
@@ -263,19 +281,27 @@ private[streaming] final class GateStateStore(spark: SparkSession,
     if (gen > 0L) Some(baseTable(gen)) else None
   }
 
+  /** The gate's fold over (state ++ batch) rows, applied by
+    * [[compact]]. Default: one row per distinct state row, keeping
+    * min(batch) so the `batch < n` replay filter stays monotone
+    * across folds.
+    */
+  protected def fold(rows: DataFrame): DataFrame =
+    rows.groupBy(dataCols.map(col): _*).agg(min("batch").as("batch"))
+
   /** Fold every data partition strictly below min(max id present,
     * currentBatchId) into the next bucketed base generation through
-    * `foldMerge`. Returns the new watermark (exclusive).
+    * [[fold]]. Returns the new watermark (exclusive).
     */
   def compact(currentBatchId: Long = Long.MaxValue): Long = {
     val ids = dataBatchIds()
     val (gen, upTo) = readMeta()
     if (ids.isEmpty) return upTo
     val newUpTo = math.min(ids.max, currentBatchId)
-    val fold = ids.filter(i => i >= upTo && i < newUpTo).sorted
-    if (fold.isEmpty) return upTo
+    val folded = ids.filter(i => i >= upTo && i < newUpTo).sorted
+    if (folded.isEmpty) return upTo
     val foldDf = spark.read.option("basePath", dataDir)
-      .parquet(fold.map(i => s"$dataDir/batch=$i"): _*)
+      .parquet(folded.map(i => s"$dataDir/batch=$i"): _*)
       .select((dataCols.map(col) :+
         col("batch").cast("long").as("batch")): _*)
     val all = if (gen > 0L) baseTable(gen).unionByName(foldDf) else foldDf
@@ -284,7 +310,7 @@ private[streaming] final class GateStateStore(spark: SparkSession,
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     val (f, _) = fs(baseDir)
     f.delete(new org.apache.hadoop.fs.Path(genPath(newGen)), true)
-    foldMerge(all).write.format("parquet")
+    fold(all).write.format("parquet")
       .bucketBy(numBuckets, bucketCol).sortBy(bucketCol)
       .option("path", genPath(newGen))
       .saveAsTable(tbl)
@@ -333,17 +359,32 @@ private[streaming] final class GateStateStore(spark: SparkSession,
     removed
   }
 
-  /** Read back the verdicts partition just written for `batchId`
-    * with an EXPLICIT schema — an empty micro-batch writes a
-    * directory with no part files, which schema inference rejects
-    * ("Unable to infer schema") but an explicit schema reads as
-    * empty. Gates derive standing state from this readback so state
-    * reflects exactly what was persisted.
+  /** Gate one micro-batch: write its verdicts and the state rows it
+    * admits under `batch=<batchId>` through [[commit]]. Idempotent per
+    * batchId.
     */
-  def readBackVerdicts(batchId: Long,
-      schema: StructType): DataFrame =
-    spark.read.schema(schema)
-      .parquet(s"$verdictsDir/batch=$batchId")
+  def applyBatch(batch: Dataset[T], batchId: Long): Unit
+
+  /** The per-batch commit every gate shares: persist `cached` (in
+    * order), overwrite `verdicts/batch=<batchId>` with `verdicts`, read
+    * it back with the written schema (an empty micro-batch writes a
+    * directory with no part files, which schema inference rejects but
+    * an explicit schema reads as empty), derive the state rows with
+    * `state` and overwrite `<data>/batch=<batchId>`; unpersist in
+    * `finally`. `verdicts` is evaluated after the persist, so every
+    * job it plans reads the caches.
+    */
+  protected def commit(batchId: Long, cached: DataFrame*)(
+      verdicts: => DataFrame)(state: DataFrame => DataFrame): Unit = {
+    cached.foreach(_.persist())
+    try {
+      val v = verdicts
+      val dir = s"$verdictsDir/batch=$batchId"
+      v.write.mode("overwrite").parquet(dir)
+      state(spark.read.schema(v.schema).parquet(dir))
+        .write.mode("overwrite").parquet(s"$dataDir/batch=$batchId")
+    } finally cached.foreach(_.unpersist())
+  }
 
   /** The standing-state sides batch `batchId` must probe, as
     * SEPARATE frames: the committed base (bucketed — joins against
@@ -351,10 +392,10 @@ private[streaming] final class GateStateStore(spark: SparkSession,
     * not-yet-folded recent batch partitions. Probing them separately
     * keeps the bucketed side's scan-without-shuffle property — a
     * union would erase the bucketing for the whole join. Both frames
-    * project exactly `dataSchema`'s columns. Empty before the first
+    * project exactly the state columns. Empty before the first
     * admitted batch.
     */
-  def sources(batchId: Long): Seq[DataFrame] = {
+  protected def sources(batchId: Long): Seq[DataFrame] = {
     val (gen, upTo) = readMeta()
     val base =
       if (gen > 0L)
@@ -371,30 +412,43 @@ private[streaming] final class GateStateStore(spark: SparkSession,
     base.toSeq ++ recent.toSeq
   }
 
-  /** [[sources]] as one frame (an empty dataSchema frame when there
-    * is no standing state yet) — for gates whose probe is a
-    * semi-join, where the union still prunes bucket-side scans.
-    */
-  def sourcesUnion(batchId: Long): DataFrame =
-    sources(batchId) match {
-      case Nil => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dataSchema)
-      case srcs => srcs.reduce(_ unionByName _)
-    }
+  /** `srcs` as one frame; an empty state frame when there are none. */
+  protected def union(srcs: Seq[DataFrame]): DataFrame = srcs match {
+    case Nil => spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dataSchema)
+    case _ => srcs.reduce(_ unionByName _)
+  }
 
-  /** The shared foreachBatch wiring: run the gate's `apply` for each
-    * micro-batch, then (optionally, every n batches) the maintenance
-    * pass AFTER the batch's own writes with `currentBatchId = id` —
-    * the newest batch dir always survives for replay, and a restart
-    * that re-runs a batch re-runs an idempotent compaction.
+  /** State rows admitted strictly before `batchId`, as one frame —
+    * for probes that are semi-joins, where the union still prunes
+    * bucket-side scans. May hold several rows per key (one per
+    * unfolded batch) when the fold aggregates.
     */
-  def start(docs: DataFrame, checkpointDir: String, compactEvery: Int)(
-      apply: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
+  def standing(batchId: Long): DataFrame = union(sources(batchId))
+
+  /** Verdicts of batches <= upTo: the replay guard. Columns: the
+    * verdict key, `batch`, then the gate's other verdict columns.
+    */
+  def readVerdicts(upTo: Long): DataFrame = {
+    val v = spark.read.option("basePath", verdictsDir)
+      .parquet(verdictsDir).filter(col("batch") <= upTo)
+    val cols = v.columns.toSeq.filter(_ != "batch").map(col)
+    v.select((cols.head +: col("batch").cast("long").as("batch") +:
+      cols.tail): _*)
+  }
+
+  /** Production wiring: run [[applyBatch]] for each micro-batch, then
+    * (optionally, every n batches) the maintenance pass AFTER the
+    * batch's own writes with `currentBatchId = id` — the newest batch
+    * dir always survives for replay, and a restart that re-runs a
+    * batch re-runs an idempotent compaction.
+    */
+  def start(in: Dataset[T], checkpointDir: String,
+      compactEvery: Int = 0): StreamingQuery =
+    in.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        apply(b, id)
+      .foreachBatch { (b: Dataset[T], id: Long) =>
+        applyBatch(b, id)
         if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
           compact(currentBatchId = id)
           vacuum(currentBatchId = id)

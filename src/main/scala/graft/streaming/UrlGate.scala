@@ -2,92 +2,43 @@ package graft.streaming
 
 import graft.functions.GraftFunctions.portableHash
 import graft.ops.UrlOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming URL-frontier gate — the crawl scheduler's seen-set,
-  * incremental: each micro-batch of candidate URLs is canonicalized
-  * ([[UrlOps.canonicalize]] — scheme/host case, www, default ports,
-  * tracking params, trailing slash, fragments all fold), and a URL
-  * is admitted iff its canonical form is grammar-valid, unseen by
-  * any earlier batch, and not claimed by a smaller id within its own
-  * batch. Admitted canonical-URL hashes become standing state —
-  * 8 bytes per URL, no URL text ever persists — so the frontier
-  * never re-fetches a page it has already scheduled under ANY
-  * spelling of its URL.
+  * incremental: each micro-batch of candidate (id, url) rows is
+  * canonicalized ([[UrlOps.canonicalize]] — scheme/host case, www,
+  * default ports, tracking params, trailing slash, fragments all
+  * fold), so the frontier never re-fetches a page it has already
+  * scheduled under ANY spelling of its URL.
   *
-  * Per-URL verdicts: `admitted` / `dup_in_batch` / `dup_of_corpus` /
-  * `rejected` (grammar reject — a frontier drops those loudly, it
-  * never fetches them).
-  *
-  * State layout under `stateDir` (the [[GateStateStore]] conventions
-  * — overwrite-idempotent Hive partitions, `batch < n` replay guard,
-  * META-committed h-bucketed base, vacuum):
-  * {{{
-  *   seen/batch=<n>/      admitted urls' canonical hashes (h)
-  *   base/gen=<g>/        compacted seen-set bucketed by h
-  *   base/META.<g>        "<gen> <upTo>" — create-no-overwrite commit
-  *   verdicts/batch=<n>/  (id, canonical, verdict)
-  * }}}
-  *
-  * Hash collisions (portableHash) conflate two canonicals — a
+  * Key and fold: `seen/` holds admitted canonicals' portableHash `h`
+  * (8 bytes a URL, no URL text persists), one row per h. A hash
   * collision suppresses a fetch, never double-fetches; conservative
   * for a frontier and shared verbatim by the oracle twin.
   *
-  * Scale shape: per batch, one canonicalization pass over the BATCH
-  * only, one batch-local min-id claim (a batch-sized aggregation),
-  * and one membership semi-join against the stored seen-set — the
-  * corpus side is h-bucketed after [[compact]], so the big side of
-  * the probe scans without an Exchange and only the batch side
-  * shuffles.
+  * Verdicts `(id, canonical, verdict)`: `rejected` (grammar reject —
+  * a frontier drops those loudly, it never fetches them),
+  * `dup_of_corpus` (h admitted by an earlier batch), `dup_in_batch`
+  * (a smaller id of this batch claims h), else `admitted`. Repeated
+  * ids within a batch collapse first (keeping one row).
   */
 final class UrlGate(spark: SparkSession, stateDir: String,
-    numBuckets: Int = 32) {
+    numBuckets: Int = 32) extends StandingGate[Row](spark, stateDir,
+    "seen", "graft_urlgate_base", "h BIGINT", "h", numBuckets) {
 
-  private val seenSchema = StructType(Seq(StructField("h", LongType)))
-
-  // fold semantics: a canonical admitted by two batches keeps one
-  // row; min(batch) keeps the `batch < n` replay filter monotone
-  private val store = new GateStateStore(spark, stateDir,
-    dataSubdir = "seen", tablePrefix = "graft_urlgate_base",
-    dataSchema = seenSchema, bucketCol = "h", numBuckets = numBuckets,
-    foldMerge = _.groupBy("h").agg(min("batch").as("batch")))
-
-  /** [[GateStateStore.compact]] with the distinct-keep-min fold. */
-  def compact(currentBatchId: Long = Long.MaxValue): Long =
-    store.compact(currentBatchId)
-
-  /** Reclaim unreachable state — [[GateStateStore.vacuum]]. */
-  def vacuum(currentBatchId: Long): Int = store.vacuum(currentBatchId)
-
-  /** The compacted seen-set, if a compaction has committed. */
-  def baseIndex(): Option[DataFrame] = store.baseIndex()
-
-  /** Canonical hashes admitted strictly before `batchId`. */
-  def seenHashes(batchId: Long): DataFrame = store.sourcesUnion(batchId)
-
-  /** Gate one micro-batch of (id, url): write per-URL verdicts and
-    * the admitted canonicals' hashes under `batch=<batchId>`.
-    * Idempotent per batchId (partition overwrite). Repeated ids
-    * within a batch collapse first (keeping one row), the
-    * [[IngestGate.applyBatch]] guard.
-    */
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
-    val b = batch.dropDuplicates("id")
-    val canon = b.select(col("id"),
+    val canon = batch.dropDuplicates("id").select(col("id"),
         UrlOps.canonicalize(col("url")).as("canonical"))
       .withColumn("h", portableHash(col("canonical")))
-    canon.persist()
-    try {
+    commit(batchId, canon) {
       val valid = canon.filter(col("canonical").isNotNull)
       // within-batch claim: the smallest id per canonical hash wins
       val claims = valid.groupBy("h").agg(min("id").as("__keeper"))
       // standing membership: batch side probes the h-bucketed corpus
       val seen = valid.select("h").distinct()
-        .join(seenHashes(batchId), Seq("h"), "left_semi")
-      val verdicts = canon
-        .join(claims, Seq("h"), "left")
+        .join(standing(batchId), Seq("h"), "left_semi")
+      canon.join(claims, Seq("h"), "left")
         .join(seen.withColumn("__seen", lit(true)), Seq("h"), "left")
         .select(col("id"), col("canonical"),
           when(col("canonical").isNull, lit("rejected"))
@@ -95,33 +46,7 @@ final class UrlGate(spark: SparkSession, stateDir: String,
               lit("dup_of_corpus"))
             .when(col("id") =!= col("__keeper"), lit("dup_in_batch"))
             .otherwise(lit("admitted")).as("verdict"))
-      verdicts.write.mode("overwrite")
-        .parquet(s"${store.verdictsDir}/batch=$batchId")
-      // admitted canonicals' hashes become standing state (verdicts
-      // first — a crash between the writes leaves a replayable batch;
-      // explicit schema so an empty micro-batch's part-file-less
-      // directory reads as empty instead of failing schema inference)
-      store.readBackVerdicts(batchId, verdicts.schema)
-        .filter(col("verdict") === "admitted")
-        .select(portableHash(col("canonical")).as("h")).distinct()
-        .write.mode("overwrite")
-        .parquet(s"${store.dataDir}/batch=$batchId")
-      ()
-    } finally canon.unpersist()
+    } { _.filter(col("verdict") === "admitted")
+      .select(portableHash(col("canonical")).as("h")).distinct() }
   }
-
-  /** Production wiring with optional in-loop maintenance —
-    * [[GateStateStore.start]].
-    */
-  def start(urls: DataFrame, checkpointDir: String,
-      compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    store.start(urls, checkpointDir, compactEvery)(applyBatch)
-
-  /** Verdicts of batches <= upTo (replay-guard filtered). */
-  def readVerdicts(upTo: Long): DataFrame =
-    spark.read.option("basePath", store.verdictsDir)
-      .parquet(store.verdictsDir)
-      .filter(col("batch") <= upTo)
-      .select(col("id"), col("batch").cast("long").as("batch"),
-        col("canonical"), col("verdict"))
 }

@@ -1,98 +1,55 @@
 package graft.streaming
 
 import graft.ops.{Dedup, Multimodal}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming CLIP near-dup gate — [[NearDupMediaGate]]'s incremental
-  * admission lifted from single images to videos, on the
-  * [[GateStateStore]] conventions (consumer #7 of the shared store).
-  * A clip's signature is its DISTINCT frame-dHash set (the
-  * mm_video_neardup signature); two clips match when a MAJORITY of
-  * each side's distinct frames near-match the other at per-frame
-  * Hamming ≤ 6 (2·matched ≥ n on both sides, exact integers — the
-  * radius-aware criterion of mm_video_neardup_r1, so a lossy
-  * re-encode that perturbs EVERY frame by 1–2 bits still matches).
-  * Each micro-batch of (id, container bytes): a clip is admitted iff
-  * it decodes to ≥ 1 frame, majority-matches no PREVIOUSLY admitted
-  * clip (`dup_of_corpus`), and is the min-id canonical of its
-  * batch-local match component (`dup_in_batch` otherwise).
+  * admission lifted from single images to videos. A clip's signature
+  * is its DISTINCT frame-dHash set (the mm_video_neardup signature);
+  * two clips match when a MAJORITY of each side's distinct frames
+  * near-match the other at per-frame Hamming ≤ 6 (2·matched ≥ n on
+  * both sides, exact integers — the radius-aware criterion of
+  * mm_video_neardup_r1, so a lossy re-encode that perturbs EVERY
+  * frame by 1–2 bits still matches).
   *
-  * State layout is the production probe shape: admitted clips
-  * persist as BANDED frame rows (id, n, bi, bv, hash_hi, hash_lo) —
-  * the clip id and its distinct-frame count ride every row so the
-  * majority verify needs no second lookup — bucketed by `bv`. The
-  * corpus probe equi-joins the batch side (frames × 17 radius-1
-  * values per band, the SMALL side carries the fan-out) against the
-  * bucket-pruned standing bands; pigeonhole guarantees every standing
-  * frame within Hamming ≤ 7 surfaces, the popcount verifies ≤ 6, and
-  * the majority fold runs on the verified matches only. The standing
-  * side is never scanned row-by-row and never carries an expansion.
+  * Key and fold: `seen/` holds admitted clips' BANDED frame rows
+  * (id, n, bi, bv, hash_hi, hash_lo) — the clip id and its
+  * distinct-frame count ride every row so the majority verify needs
+  * no second lookup — one row per distinct band row, bucketed by
+  * `bv`. The corpus probe equi-joins the batch side (frames × 17
+  * radius-1 values per band, the SMALL side carries the fan-out)
+  * against the bucket-pruned standing bands; pigeonhole guarantees
+  * every standing frame within Hamming ≤ 7 surfaces, the popcount
+  * verifies ≤ 6, and the majority fold runs on the verified matches
+  * only.
   *
-  * State under `stateDir` (shared conventions — overwrite-idempotent
-  * Hive partitions, `batch < n` replay guard, META-committed
-  * bucketed base, vacuum):
-  * {{{
-  *   seen/batch=<n>/      admitted clips' band rows
-  *                        (id, n, bi, bv, hash_hi, hash_lo)
-  *   base/gen=<g>/        compacted band set bucketed by bv
-  *   base/META.<g>        "<gen> <upTo>" — create-no-overwrite commit
-  *   verdicts/batch=<n>/  (id, n_frames, verdict)
-  * }}}
+  * Verdicts `(id, n_frames, verdict)`: `rejected` (decodes to no ok
+  * frame), `dup_of_corpus` (majority-matches a PREVIOUSLY admitted
+  * clip), `dup_in_batch` (not the min-id canonical of its batch-local
+  * match component), else `admitted`.
   */
 final class VideoGate(spark: SparkSession, stateDir: String,
-    numBuckets: Int = 32) {
+    numBuckets: Int = 32) extends StandingGate[(Long, Array[Byte])](
+    spark, stateDir, "seen", "graft_videogate_base",
+    "id BIGINT, n BIGINT, bi INT, bv BIGINT, hash_hi BIGINT, " +
+      "hash_lo BIGINT", "bv", numBuckets) {
 
-  private val bandSchema = StructType(Seq(
-    StructField("id", LongType), StructField("n", LongType),
-    StructField("bi", IntegerType), StructField("bv", LongType),
-    StructField("hash_hi", LongType), StructField("hash_lo", LongType)))
-
-  private val store = new GateStateStore(spark, stateDir,
-    dataSubdir = "seen", tablePrefix = "graft_videogate_base",
-    dataSchema = bandSchema, bucketCol = "bv",
-    numBuckets = numBuckets,
-    foldMerge = _.groupBy("id", "n", "bi", "bv", "hash_hi", "hash_lo")
-      .agg(min("batch").as("batch")))
-
-  def compact(currentBatchId: Long = Long.MaxValue): Long =
-    store.compact(currentBatchId)
-
-  def vacuum(currentBatchId: Long): Int = store.vacuum(currentBatchId)
-
-  def baseIndex(): Option[DataFrame] = store.baseIndex()
-
-  /** Admitted clips' band rows of batches strictly before `batchId`. */
-  def seenBands(batchId: Long): DataFrame = store.sourcesUnion(batchId)
-
-  private def hamming(hiA: String, loA: String, hiB: String,
-      loB: String) =
-    (bit_count(col(hiA).bitwiseXOR(col(hiB))) +
-      bit_count(col(loA).bitwiseXOR(col(loB)))).cast("long")
-
-  /** Gate one micro-batch of (id, container bytes): write per-clip
-    * verdicts and the admitted clips' banded frame rows under
-    * `batch=<batchId>`. Idempotent per batchId (partition overwrite).
-    */
   def applyBatch(batch: Dataset[(Long, Array[Byte])],
       batchId: Long): Unit = {
     val framesAll = Multimodal.videoFrameDHash(batch.dropDuplicates("_1"))
       .toDF().withColumnRenamed("doc_id", "id")
-    framesAll.persist()
-    try {
-      // the clip signature: distinct ok frame hashes + their count;
-      // zero ok frames (container corruption or all-bad frames) means
-      // no signature — rejected, never admitted-by-vacuous-majority
-      val frames = framesAll.filter(col("status") === "ok")
-        .select("id", "hash_hi", "hash_lo").distinct()
-      frames.persist()
+    // the clip signature: distinct ok frame hashes + their count;
+    // zero ok frames (container corruption or all-bad frames) means
+    // no signature — rejected, never admitted-by-vacuous-majority
+    val frames = framesAll.filter(col("status") === "ok")
+      .select("id", "hash_hi", "hash_lo").distinct()
+    commit(batchId, framesAll, frames) {
       val nOf = frames.groupBy("id").agg(count(lit(1)).as("n"))
       // corpus probe: batch frames banded and expanded by the 17
       // radius-1 masks per band against the standing EXACT bands
-      val masks = Multimodal.radius1Masks16
       val probe = Multimodal.dhashBands(frames, Seq("id"))
-        .withColumn("__m", explode(masks))
+        .withColumn("__m", explode(Multimodal.radius1Masks16))
         .select(col("id").as("qid"), col("bi"),
           col("bv").bitwiseXOR(col("__m")).as("bv"),
           col("hash_hi").as("qhi"), col("hash_lo").as("qlo"))
@@ -101,8 +58,9 @@ final class VideoGate(spark: SparkSession, stateDir: String,
       // distinct standing frames vs the standing clip's n (carried
       // on its rows)
       val corpusDup = probe
-        .join(seenBands(batchId), Seq("bi", "bv"))
-        .filter(hamming("qhi", "qlo", "hash_hi", "hash_lo") <= 6L)
+        .join(standing(batchId), Seq("bi", "bv"))
+        .filter(Dedup.hamming128(col("qhi"), col("qlo"), col("hash_hi"),
+          col("hash_lo")) <= 6L)
         .groupBy(col("qid"), col("id").as("sid"), col("n").as("sn"))
         .agg(countDistinct(struct(col("qhi"), col("qlo"))).as("mq"),
           countDistinct(struct(col("hash_hi"), col("hash_lo")))
@@ -118,7 +76,8 @@ final class VideoGate(spark: SparkSession, stateDir: String,
       // batch-local components over the majority-match pair graph —
       // the mm_video_neardup_r1 generator, batch-sized on both sides
       val pairs = Multimodal.dhashBandProbeCandidates(remFrames)
-        .filter(hamming("ha", "la", "hb", "lb") <= 6L)
+        .filter(Dedup.hamming128(col("ha"), col("la"), col("hb"),
+          col("lb")) <= 6L)
         .groupBy("id_a", "id_b")
         .agg(countDistinct(struct(col("ha"), col("la"))).as("ma"),
           countDistinct(struct(col("hb"), col("lb"))).as("mb"))
@@ -131,7 +90,7 @@ final class VideoGate(spark: SparkSession, stateDir: String,
         .select("id_a", "id_b")
       val comp = Dedup.connectedComponents(pairs, "id_a", "id_b")
         .withColumnRenamed("id", "__cid")
-      val verdicts = framesAll.select("id").distinct()
+      framesAll.select("id").distinct()
         .join(nOf, Seq("id"), "left")
         .join(corpusDup.withColumn("__corpus", lit(true))
           .withColumnRenamed("id", "__cd2"),
@@ -145,34 +104,14 @@ final class VideoGate(spark: SparkSession, stateDir: String,
             .when(coalesce(col("comp"), col("id")) =!= col("id"),
               lit("dup_in_batch"))
             .otherwise(lit("admitted")).as("verdict"))
-      verdicts.write.mode("overwrite")
-        .parquet(s"${store.verdictsDir}/batch=$batchId")
-      // admitted clips' frames persist BANDED with (id, n) riding
-      // every row (verdicts first — a crash between the writes leaves
-      // a replayable batch; explicit-schema readback so an empty
-      // micro-batch reads as empty). The frame hashes come from the
-      // batch-local frame table: applyBatch replays deterministically
-      // under the same batchId, so the join reconstructs identical
-      // state on a post-crash replay.
-      Multimodal.dhashBands(
-          store.readBackVerdicts(batchId, verdicts.schema)
-            .filter(col("verdict") === "admitted")
-            .select(col("id"), col("n_frames").as("n"))
-            .join(frames, "id"),
+    } { v =>
+      // the frame hashes come from the batch-local frame table:
+      // applyBatch replays deterministically under the same batchId,
+      // so the join reconstructs identical state on a replay
+      Multimodal.dhashBands(v.filter(col("verdict") === "admitted")
+          .select(col("id"), col("n_frames").as("n")).join(frames, "id"),
           Seq("id", "n"))
         .select("id", "n", "bi", "bv", "hash_hi", "hash_lo")
-        .write.mode("overwrite")
-        .parquet(s"${store.dataDir}/batch=$batchId")
-      frames.unpersist()
-      ()
-    } finally framesAll.unpersist()
+    }
   }
-
-  /** Verdicts of batches <= upTo (replay-guard filtered). */
-  def readVerdicts(upTo: Long): DataFrame =
-    spark.read.option("basePath", store.verdictsDir)
-      .parquet(store.verdictsDir)
-      .filter(col("batch") <= upTo)
-      .select(col("id"), col("batch").cast("long").as("batch"),
-        col("n_frames"), col("verdict"))
 }

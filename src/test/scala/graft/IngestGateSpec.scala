@@ -68,7 +68,7 @@ class IngestGateSpec extends SparkSpec {
       (5L, "novel fresh unrelated words"))
     q.processAllAvailable()
     q.stop()
-    val v = gate.readVerdicts()
+    val v = gate.readVerdicts(1L)
       .select("doc_id", "verdict", "dup_of")
       .collect().map(r => r.getLong(0) ->
         ((r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long]))))
@@ -100,7 +100,7 @@ class IngestGateSpec extends SparkSpec {
       (3L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"), 0L)
     gate.applyBatch(Seq((4L, "alpha beta gamma delta epsilon"),
       (5L, "novel fresh unrelated words")).toDF("doc_id", "text"), 1L)
-    val v = gate.readVerdicts()
+    val v = gate.readVerdicts(1L)
       .select("doc_id", "verdict", "dup_of")
       .collect().map(r => r.getLong(0) ->
         ((r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long]))))
@@ -121,7 +121,7 @@ class IngestGateSpec extends SparkSpec {
     val gate = new IngestGate(spark, state)
     gate.applyBatch(Seq((1L, "alpha beta gamma delta epsilon"),
       (3L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"), 0L)
-    val v = gate.readVerdicts()
+    val v = gate.readVerdicts(0L)
       .select("doc_id", "verdict").as[(Long, String)].collect().toMap
     assert(v(1L) == "admitted" && v(3L) == "dup_in_batch")
   }
@@ -135,7 +135,7 @@ class IngestGateSpec extends SparkSpec {
       (1L, "alpha beta gamma delta"),
       (2L, "unrelated words entirely")).toDF("doc_id", "text")
     gate.applyBatch(b0, 0L)
-    val v = gate.readVerdicts().select("doc_id").as[Long].collect().toSeq
+    val v = gate.readVerdicts(0L).select("doc_id").as[Long].collect().toSeq
     assert(v.sorted == Seq(1L, 2L), "one verdict row per doc_id")
     val bandRows = spark.read.parquet(s"$state/corpus")
       .filter(col("doc_id") === 1L).count()
@@ -161,10 +161,10 @@ class IngestGateSpec extends SparkSpec {
     assert(gateA.compact() == 1L)
     assert(gateA.baseIndex().isDefined)
     gateA.applyBatch(b2, 2L); gateB.applyBatch(b2, 2L)
-    def verdicts(g: IngestGate) = g.readVerdicts()
+    def verdicts(g: IngestGate) = g.readVerdicts(2L)
       .select("doc_id", "verdict", "dup_of", "best_jac", "batch")
       .collect().map(r => (r.getLong(0), r.getString(1),
-        Option(r.get(2)), Option(r.get(3)), r.getInt(4))).toSet
+        Option(r.get(2)), Option(r.get(3)), r.getLong(4))).toSet
     assert(verdicts(gateA) == verdicts(gateB),
       "split-probe over compacted base must equal the uncompacted gate")
     // plan shape: joining the bucketed base on band_key shuffles ONLY
@@ -209,13 +209,13 @@ class IngestGateSpec extends SparkSpec {
     // corpus: batch=0, batch=1 (folded) + batch=7 (orphan); verdicts:
     // batch=7 (orphan) — base gen 1 is current, nothing superseded yet
     assert(removed == 4, s"expected 4 dirs removed, got $removed")
-    assert(gate.readVerdicts().select("doc_id").as[Long].collect().toSet ==
+    assert(gate.readVerdicts(7L).select("doc_id").as[Long].collect().toSet ==
       Set(1L, 2L, 3L))
     // the probe still sees every admitted doc: a copy of doc 1 (now
     // base-resident) is recognized after vacuum
     gate.applyBatch(Seq((20L, "alpha beta gamma delta"))
       .toDF("doc_id", "text"), 3L)
-    val v3 = gate.readVerdicts().filter(col("batch") === 3)
+    val v3 = gate.readVerdicts(3L).filter(col("batch") === 3)
       .select("verdict", "dup_of").collect().head
     assert((v3.getString(0), v3.getLong(1)) == (("dup_of_corpus", 1L)))
     // second compaction supersedes gen 1; vacuum drops it
@@ -223,6 +223,21 @@ class IngestGateSpec extends SparkSpec {
       .toDF("doc_id", "text"), 4L)
     assert(gate.compact(currentBatchId = 4L) == 4L)
     assert(gate.vacuum(currentBatchId = 4L) >= 3)
+  }
+
+  test("gate: readVerdicts hides verdict dirs beyond upTo") {
+    val gate = new IngestGate(spark, tmp())
+    gate.applyBatch(Seq((1L, "alpha beta gamma delta"))
+      .toDF("doc_id", "text"), 0L)
+    gate.applyBatch(Seq((2L, "unrelated words entirely"))
+      .toDF("doc_id", "text"), 1L)
+    // a rolled-back attempt's verdict dir, not yet vacuumed
+    gate.applyBatch(Seq((9L, "orphan attempt content"))
+      .toDF("doc_id", "text"), 5L)
+    assert(gate.readVerdicts(1L).select("doc_id").as[Long].collect().toSet ==
+      Set(1L, 2L))
+    assert(gate.readVerdicts(5L).select("doc_id").as[Long].collect().toSet ==
+      Set(1L, 2L, 9L))
   }
 
   test("gate: compactEvery runs maintenance inside the streaming loop") {
@@ -244,10 +259,10 @@ class IngestGateSpec extends SparkSpec {
     // a copy of the base-resident doc 1 is still recognized
     in.addData((4L, "alpha beta gamma delta epsilon")); q.processAllAvailable()
     q.stop()
-    val v = gate.readVerdicts().filter(col("batch") === 3)
+    val v = gate.readVerdicts(3L).filter(col("batch") === 3)
       .select("verdict", "dup_of").collect().head
     assert((v.getString(0), v.getLong(1)) == (("dup_of_corpus", 1L)))
-    assert(gate.readVerdicts().select("doc_id").as[Long].collect().toSet ==
+    assert(gate.readVerdicts(3L).select("doc_id").as[Long].collect().toSet ==
       Set(1L, 2L, 3L, 4L))
   }
 
@@ -263,7 +278,7 @@ class IngestGateSpec extends SparkSpec {
     // double-admission, and the corpus it probes excludes its own
     // half-written partition
     gate.applyBatch(b1, 1L)
-    val v = gate.readVerdicts().filter(col("batch") === 1)
+    val v = gate.readVerdicts(1L).filter(col("batch") === 1)
       .select("doc_id", "verdict", "dup_of").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(v.toSeq == Seq((3L, "dup_of_corpus", 1L)))

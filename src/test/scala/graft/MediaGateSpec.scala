@@ -6,7 +6,7 @@ import graft.streaming.MediaGate
 /** MediaGate: the streaming perceptual seen-set. Fixtures pin all
   * four verdicts, brightness-variant collapse across batches, replay
   * idempotency, and verdict stability across compaction + vacuum —
-  * the GateStateStore conventions through their fifth consumer.
+  * the StandingGate conventions through their fifth consumer.
   */
 class MediaGateSpec extends SparkSpec {
   import spark.implicits._

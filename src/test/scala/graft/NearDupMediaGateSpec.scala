@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** The streaming NEAR-dup media gate: Hamming-≤6 admission against
   * standing state (not exact-hash), batch-local component collapse,
-  * compaction/restart/replay through the sixth GateStateStore
+  * compaction/restart/replay through the sixth StandingGate
   * consumer. Fixtures are 9×8 gray-walk PNGs whose dHash equals a
   * chosen 64-bit pattern exactly, so pairwise distances are
   * controlled bit counts.

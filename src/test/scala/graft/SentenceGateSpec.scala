@@ -109,7 +109,7 @@ class SentenceGateSpec extends SparkSpec {
     // standing counts sum across base + recent: footer nd 2 in the
     // folded base (batch 0) plus 1 each in the unfolded batch-1 and
     // batch-2 partitions — 4 sightings total
-    val standing = g.standingCounts(3L)
+    val standing = g.standing(3L)
       .groupBy("h").agg(sum("nd").as("nd")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val fh = graft.functions.GraftFunctions.portableHashLocal(Footer)

@@ -74,7 +74,7 @@ class SpanGateSpec extends SparkSpec {
     assert(verdictMap(g, 1L) == before)
     // the replayed batch's corpus dir was overwritten, not doubled,
     // and batch 1 never probes itself: hash count is doc 1's windows
-    assert(g.corpusHashes(1L).count() == 18L)
+    assert(g.standing(1L).count() == 18L)
   }
 
   test("gate: streaming drive via start() — foreachBatch + maintenance") {
@@ -111,7 +111,7 @@ class SpanGateSpec extends SparkSpec {
     assert(upTo == 1L)
     g.vacuum(currentBatchId = 2L)
     // the compacted base + recent partition serve the same corpus
-    assert(g.corpusHashes(2L).count() == 54L) // 3 docs x 18 windows
+    assert(g.standing(2L).count() == 54L) // 3 docs x 18 windows
     // a copy of doc 1 (now only reachable through the BASE) rejects
     g.applyBatch(Seq((7L, baseText)).toDF("doc_id", "text"), 2L)
     assert(verdictMap(g, 2L)((7L, 2L)) == ((20L, 20L, false)))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** UrlGate: the streaming crawl-frontier seen-set. Fixtures pin all
   * four verdicts, canonical folding across spellings, replay
   * idempotency, and verdict stability across compaction + vacuum —
-  * the GateStateStore conventions through their fourth consumer.
+  * the StandingGate conventions through their fourth consumer.
   */
 class UrlGateSpec extends SparkSpec {
   import spark.implicits._

@@ -4,7 +4,7 @@ import graft.ops.{ImageCodec, VideoCodec}
 import graft.streaming.VideoGate
 import org.apache.spark.sql.functions._
 
-/** The streaming CLIP near-dup gate (GateStateStore consumer #7):
+/** The streaming CLIP near-dup gate (StandingGate consumer #7):
   * majority-of-frames Hamming-≤6 admission against standing state,
   * batch-local component collapse, compaction/restart flow. Fixtures
   * are AVI containers of 9×8 gray-walk frames whose per-frame dHash

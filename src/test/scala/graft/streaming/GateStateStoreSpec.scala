@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** The gate-state commit protocol in isolation — the round-16 judge's
   * `weak` was a delete-then-rename META swap whose crash window
@@ -16,26 +15,25 @@ import org.apache.spark.sql.types._
   */
 class GateStateStoreSpec extends SparkSpec {
 
-  private val schema = StructType(Seq(StructField("k", LongType)))
-
-  private def freshStore(): (GateStateStore, String) = {
-    val dir = java.nio.file.Files.createTempDirectory("gatestore").toString
-    val s = new GateStateStore(spark, dir, dataSubdir = "seen",
-      tablePrefix = "graft_gatestorespec", dataSchema = schema,
-      bucketCol = "k", numBuckets = 4,
-      foldMerge = _.groupBy("k").agg(min("batch").as("batch")))
-    (s, dir)
+  private final class KeyGate(dir: String) extends StandingGate[Row](
+      spark, dir, "seen", "graft_gatestorespec", "k BIGINT", "k", 4) {
+    def applyBatch(batch: DataFrame, batchId: Long): Unit =
+      commit(batchId)(batch)(_.select("k"))
   }
 
-  private def writeBatch(s: GateStateStore, id: Long,
-      ks: Seq[Long]): Unit = {
+  private def freshStore(): (KeyGate, String) = {
+    val dir = java.nio.file.Files.createTempDirectory("gatestore").toString
+    (new KeyGate(dir), dir)
+  }
+
+  private def writeBatch(s: KeyGate, id: Long, ks: Seq[Long]): Unit = {
     import spark.implicits._
     ks.toDF("k").write.mode("overwrite")
       .parquet(s"${s.dataDir}/batch=$id")
   }
 
-  private def standing(s: GateStateStore, batchId: Long): Set[Long] =
-    s.sourcesUnion(batchId).collect().map(_.getLong(0)).toSet
+  private def standing(s: KeyGate, batchId: Long): Set[Long] =
+    s.standing(batchId).collect().map(_.getLong(0)).toSet
 
   private def ls(dir: String): Set[String] = {
     val d = new java.io.File(dir)
