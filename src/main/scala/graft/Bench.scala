@@ -196,10 +196,15 @@ object Bench {
     // contribute elapsed time indistinguishably from success
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // generated classes compiled, and their compile seconds, summed
+    // over each query's timed reps
+    val compiles = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+    val compileSecs = scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
     def runReps(name: String, n: Int): Unit = {
       val fn = SparkEntry.queries(name)
       var rep = 0
       while (rep < n && !errors.contains(name)) {
+        val (c0, ns0) = GraftSession.codegenTotals()
         val t0 = System.nanoTime()
         // noop sink, NOT count(): count() lets Catalyst elide
         // row-preserving left joins and every final projection, so a
@@ -216,7 +221,10 @@ object Bench {
               .linesIterator.take(1).mkString.replace("\"", "'").take(200)
         }
         val el = (System.nanoTime() - t0) / 1e9
+        val (c1, ns1) = GraftSession.codegenTotals()
         times(name) = math.min(times.getOrElse(name, Double.MaxValue), el)
+        compiles(name) += c1 - c0
+        compileSecs(name) += (ns1 - ns0) / 1e9
         // outside the timed section: a cache an iterative operator
         // left behind must not pressure the next measurement
         spark.catalog.clearCache()
@@ -315,6 +323,10 @@ object Bench {
       .mkString("{", ",", "}")
     val stJson =
       s"""{"med":$stMed,"min":${stSorted.head},"max":${stSorted.last},"n":${stSorted.size}}"""
+    val compilesQs = results.map { case (k, _) =>
+      "\"" + k + "\":" + compiles(k) }.mkString("{", ",", "}")
+    val compileSecsQs = results.map { case (k, _) =>
+      "\"" + k + "\":" + compileSecs(k) }.mkString("{", ",", "}")
     val sfBase = new java.io.File(sfDir).getName
     // non-default core counts get their own artifact name so a
     // low-core scaling run can never clobber the canonical 32-core
@@ -324,7 +336,7 @@ object Bench {
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (cpusEnv == "32") s"BENCH_LOCAL_$sfBase.json"
       else s"BENCH_LOCAL_${sfBase}_c$cpusEnv.json")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"queries_norm":$normQs,"canary_q":$canQs,"canary":$canaryJson,"canary_media_q":$mediaQs,"canary_media":$mediaJson,"canary_st_q":$stQs,"canary_st":$stJson,"errors":$errJson,"sf":"$sfDir","reps":$reps,"n_queries":${results.size}}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"queries_norm":$normQs,"canary_q":$canQs,"canary":$canaryJson,"canary_media_q":$mediaQs,"canary_media":$mediaJson,"canary_st_q":$stQs,"canary_st":$stJson,"codegen_compiles":$compilesQs,"codegen_s":$compileSecsQs,"errors":$errJson,"sf":"$sfDir","reps":$reps,"n_queries":${results.size}}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
       fullLine + "\n")
     catch { case e: Throwable =>

@@ -28,6 +28,25 @@ object GraftSession {
       // reader refuses by default; read it as a long of nanoseconds
       // (pairs with DuckDB's epoch_ns on the oracle side).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(CodegenCacheKey, CodegenCacheEntries.toString)
+
+  /** Spark's JVM-wide cache of compiled generated classes: a static
+    * conf, read once when the JVM first generates code. At its default
+    * of 100 entries the CDC engine's generated classes (about 290 for
+    * 3 tables, [[graft.streaming.CdcEngine.codegenWorkingSet]]) are
+    * evicted between batches, and every batch recompiles its plans
+    * with Janino. 1024 holds a 14-table engine by that census.
+    */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+  val CodegenCacheEntries = 1024
+
+  /** Compilations of generated code in this JVM so far, and their
+    * summed compile time in nanoseconds. JVM-wide: the difference over
+    * an interval counts every session's compiles in that interval.
+    */
+  def codegenTotals(): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
   def get(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val s = builder(cores).getOrCreate()

@@ -127,7 +127,8 @@ object NativeImpl {
   /** One-pass Jackson-streaming parse of the CDC JSON envelope into
     * the [[graft.parse.CdcParser.envelopeSchema]] struct. Semantics
     * mirror `from_json` in PERMISSIVE mode on the same schema exactly
-    * (equivalence-tested in CdcParserSpec):
+    * but for one intended difference (equivalence-tested in
+    * CdcParserSpec):
     *  - a SYNTAX error (or non-object input) => all-null row;
     *  - a wrong-TYPED field (or a non-integral ts/resolved element)
     *    nulls only that field — the rest of the row still parses
@@ -138,6 +139,10 @@ object NativeImpl {
     *    re-serialized token text for numbers/booleans, the compact
     *    re-serialized subtree for nested objects/arrays, null for
     *    JSON null — byte-for-byte what Spark's JacksonParser emits.
+    * The difference: Step and TxId are uint64, so a ts/resolved
+    * element in [2^63, 2^64) parses as the Long with the same bits,
+    * where from_json overflows and nulls the field (the change is then
+    * malformed, the heartbeat dropped).
     */
   def parseEnvelope(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     import com.fasterxml.jackson.core.{JsonParser, JsonToken}
@@ -175,13 +180,19 @@ object NativeImpl {
       while (p.nextToken() != JsonToken.END_ARRAY) elems += stringValue(p)
       new org.apache.spark.sql.catalyst.util.GenericArrayData(elems.toArray)
     }
+    // Position.ux orders the same bits as uint64; wider values overflow
+    def uint64Bits(v: java.math.BigInteger): Long =
+      if (v.signum >= 0 && v.bitLength <= 64) v.longValue else mismatch()
     def readLongArray(p: JsonParser): ArrayData = {
       if (p.currentToken() != JsonToken.START_ARRAY) mismatch()
       val elems = new scala.collection.mutable.ArrayBuffer[Any](2)
       while (p.nextToken() != JsonToken.END_ARRAY) {
         p.currentToken() match {
           case JsonToken.VALUE_NUMBER_INT =>
-            elems += java.lang.Long.valueOf(p.getLongValue) // overflow throws
+            elems += java.lang.Long.valueOf(
+              if (p.getNumberType != JsonParser.NumberType.BIG_INTEGER)
+                p.getLongValue
+              else uint64Bits(p.getBigIntegerValue))
           case JsonToken.VALUE_NULL => elems += null
           case _ => mismatch()
         }

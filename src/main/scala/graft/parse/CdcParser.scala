@@ -44,13 +44,16 @@ object CdcParser {
     * The parse itself is the native one-pass
     * [[graft.functions.NativeExpressions.CdcEnvelopeExpr]] — semantics
     * equal from_json(PERMISSIVE) on [[envelopeSchema]]
-    * (equivalence-tested in CdcParserSpec incl. malformed shapes).
+    * (equivalence-tested in CdcParserSpec incl. malformed shapes),
+    * except that ts/resolved elements in [2^63, 2^64) parse as uint64.
     */
   def parseEnvelope(raw: DataFrame): DataFrame =
     parseWith(raw,
       graft.functions.NativeExpressions.cdcEnvelopeNative(col("value")))
 
-  /** from_json twin, kept for the equivalence spec. */
+  /** from_json twin, kept for the equivalence spec (it rejects
+    * ts/resolved elements of 2^63 and above).
+    */
   def parseEnvelopeBuiltin(raw: DataFrame): DataFrame =
     parseWith(raw, from_json(col("value"), envelopeSchema))
 

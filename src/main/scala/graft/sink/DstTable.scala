@@ -283,7 +283,10 @@ object DstTable {
     typedPatch.observe(obs, metaAggs.head, metaAggs.tail: _*)
       .drop("__unknown")
       .withColumnRenamed("op", OpCol)
-      .withColumn(SeqCol, lit(commitVersion))
+      // a parameter, not a literal: the delta write's generated code
+      // stays the same from commit to commit and compiles once
+      .withColumn(SeqCol,
+        graft.functions.NativeExpressions.paramLong(commitVersion))
       // co-locate each bucket so a bucket's chain grows ONE file per
       // commit (the chain length bounds both read amplification and
       // the compaction trigger below)

@@ -29,6 +29,17 @@ final class EngineMetrics {
     */
   val deltaFilesLive = new AtomicLong(0)
   val bucketsCompacted = new AtomicLong(0)
+  /** Generated classes compiled during batches, and their compile
+    * time, summed over batches. A warm batch compiles nothing; a
+    * steady climb means the codegen cache evicts the engine's classes
+    * (see [[codegenCacheUndersized]]).
+    */
+  val codegenCompiles = new AtomicLong(0)
+  val codegenCompileNs = new AtomicLong(0)
+  /** 1 when the session's codegen cache holds fewer entries than the
+    * engine's working set of generated classes (set at bootstrap).
+    */
+  val codegenCacheUndersized = new AtomicLong(0)
   val lastError = new AtomicReference[String]("")
 
   // modifications of the batch in progress, summed over its applyCuts,
@@ -68,6 +79,9 @@ final class EngineMetrics {
     "replication_lag_estimation" -> replicationLagEstimation.get(),
     "hb_liveness_warnings" -> hbLivenessWarnings.get(),
     "delta_files_live" -> deltaFilesLive.get(),
-    "buckets_compacted" -> bucketsCompacted.get()
+    "buckets_compacted" -> bucketsCompacted.get(),
+    "codegen_compiles_total" -> codegenCompiles.get(),
+    "codegen_compile_ms_total" -> codegenCompileNs.get() / 1000000L,
+    "codegen_cache_undersized" -> codegenCacheUndersized.get()
   ) ++ perStreamMods.map { case (k, v) => s"stream_${k}_modifications" -> v.get() }
 }

@@ -605,4 +605,60 @@ class CdcEngineSpec extends SparkSpec {
     assert(e.metrics.deltaFilesLive.get() > 0L)
     assert(e.metrics.snapshot.contains("delta_files_live"))
   }
+
+  test("the low-latency shuffle width is a power of two per ~8k rows, at most 32") {
+    val w = Seq(0L, 7999L, 8000L, 16000L, 40000L, 47999L, 56000L, 250000L,
+      Long.MaxValue).map(CdcEngine.lowLatencyWidth)
+    assert(w == Seq(1, 1, 2, 4, 8, 8, 8, 32, 32))
+    assert((0L to 300000L by 1000L).map(CdcEngine.lowLatencyWidth).distinct.sorted ==
+      Seq(1, 2, 4, 8, 16, 32))
+  }
+
+  test("a warm non-compacting batch compiles no generated code") {
+    // the compile counter is JVM-wide; suites run one at a time in one
+    // forked JVM, so its difference over one processBatch is that
+    // batch's compiles
+    val root = Files.createTempDirectory("graft-codegen").toString
+    val cfg = EngineConfig("inst1",
+      Seq(StreamConfig(0, s"$root/src", "users", partitions = 2)),
+      s"$root/dst", ProblemStrategy.Stop, maxBatchSize = 1000, buckets = 4,
+      compactDeltas = 2)
+    val e = new CdcEngine(spark, cfg, Map(0 -> usersMeta))
+    e.bootstrap()
+    assert(e.metrics.snapshot("codegen_cache_undersized") == 0L)
+    // Spark's default cache of 100 entries is flagged
+    e.checkCodegenCache(100)
+    assert(e.metrics.snapshot("codegen_cache_undersized") == 1L)
+    e.checkCodegenCache(GraftSession.CodegenCacheEntries)
+    assert(e.metrics.snapshot("codegen_cache_undersized") == 0L)
+    // batch b: keys 1 and 2 below its quorum (step 10(b+1)), so every
+    // RUN commit grows the same buckets' chains by one delta and
+    // compactDeltas = 2 folds them every second commit
+    def batch(b: Long): Long = {
+      val q = 10L * (b + 1)
+      val (c0, _) = GraftSession.codegenTotals()
+      e.processBatch(frame(
+        (s"""{"update":{"name":"n$b"},"key":[1],"ts":[${q - 5},1]}""", 0L, 2 * b),
+        (s"""{"update":{"score":$b},"key":[2],"ts":[${q - 5},2]}""", 1L, 2 * b),
+        (s"""{"resolved":[$q,0]}""", 0L, 2 * b + 1),
+        (s"""{"resolved":[$q,0]}""", 1L, 2 * b + 1)), b)
+      GraftSession.codegenTotals()._1 - c0
+    }
+    // initial scan, RUN switch, then compactions at batches 2 and 4
+    // with a non-compacting batch between them
+    (0L to 4L).foreach { b =>
+      val before = e.metrics.bucketsCompacted.get()
+      batch(b)
+      assert((e.metrics.bucketsCompacted.get() > before) == (b == 2L || b == 4L),
+        s"batch $b: unexpected compaction pattern")
+    }
+    assert(e.state.stage == Stage.Run)
+    val total0 = e.metrics.codegenCompiles.get()
+    val compacted0 = e.metrics.bucketsCompacted.get()
+    val compiles = batch(5L)
+    assert(e.metrics.bucketsCompacted.get() == compacted0)
+    assert(compiles == 0L, s"warm batch compiled $compiles generated classes")
+    assert(e.metrics.codegenCompiles.get() == total0)
+    assert(users(e) == Map(1L -> (("n5", null)), 2L -> ((null, 5))))
+  }
 }

@@ -161,4 +161,46 @@ class CdcParserSpec extends SparkSpec {
       assert(n == b, s"row $i diverged for input: ${lines(i)}\n native=$n\n builtin=$b")
     }
   }
+
+  test("ts and resolved elements in [2^63, 2^64) parse as uint64") {
+    val df = frame(
+      ("""{"update":{"a":1},"key":[1],"ts":[9223372036854775807,1]}""", 0L, 0L),
+      ("""{"update":{"a":1},"key":[2],"ts":[9223372036854775808,1]}""", 0L, 1L),
+      ("""{"update":{"a":1},"key":[3],"ts":[18446744073709551615,18446744073709551615]}""", 0L, 2L),
+      ("""{"resolved":[18446744073709551615,0]}""", 0L, 3L),
+      // beyond 64 bits, or below -2^63: still malformed
+      ("""{"update":{"a":1},"key":[4],"ts":[18446744073709551616,1]}""", 0L, 4L),
+      ("""{"update":{"a":1},"key":[5],"ts":[-9223372036854775809,1]}""", 0L, 5L),
+      ("""{"update":{"a":1},"key":[6],"ts":[99999999999999999999999,1]}""", 0L, 6L))
+    val parsed = CdcParser.parseEnvelope(df)
+    val steps = CdcParser.changes(parsed).orderBy("offset").collect()
+      .map(r => (r.getAs[Long]("step"), r.getAs[Long]("txId"))).toSeq
+    // the same bits as the unsigned value: 2^63 is Long.MinValue and
+    // 2^64 - 1 is -1, which Position.ux orders above every other step
+    assert(steps == Seq((Long.MaxValue, 1L), (Long.MinValue, 1L), (-1L, -1L)))
+    assert(CdcParser.malformed(parsed).select("offset").as[Long].collect()
+      .sorted.toSeq == Seq(4L, 5L, 6L))
+    val hb = CdcParser.heartbeats(parsed).collect()
+    assert(hb.map(r => (r.getAs[Long]("step"), r.getAs[Long]("txId"))).toSeq ==
+      Seq((-1L, 0L)))
+  }
+
+  test("a heartbeat at the top of the uint64 range reaches the tracker") {
+    val parsed = CdcParser.parseEnvelope(frame(
+      ("""{"resolved":[9223372036854775807,5]}""", 0L, 0L),
+      ("""{"resolved":[18446744073709551615,0]}""", 0L, 1L),
+      ("""{"resolved":[9223372036854775808,0]}""", 1L, 0L)))
+    val tracker = new graft.order.HeartbeatTracker(Set((0, 0L), (0, 1L)))
+    graft.order.BatchOrder
+      .partitionMaximaWithMalformed(parsed, graft.model.Position(1L, 0L))
+      .collect().foreach { r =>
+        assert(r.getAs[Long]("nMal") == 0L)
+        tracker.add(r.getAs[Int]("tableId"), r.getAs[Long]("partitionId"),
+          graft.model.Position(r.getAs[Long]("step"), r.getAs[Long]("txId")))
+      }
+    assert(tracker.lastHb(0, 0L) == Some(graft.model.Position(-1L, 0L)))
+    assert(tracker.maxHb == Some(graft.model.Position(-1L, 0L)))
+    // the quorum is the lower partition's heartbeat, 2^63
+    assert(tracker.quorum == Some(graft.model.Position(Long.MinValue, 0L)))
+  }
 }

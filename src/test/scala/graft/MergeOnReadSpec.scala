@@ -99,6 +99,15 @@ class MergeOnReadSpec extends SparkSpec {
     }
     assert(tvM.deltaFiles.nonEmpty, "MoR run should have live delta chains")
     assert(tvC.deltaFiles.isEmpty)
+    // every delta row carries the version of the commit that wrote it
+    // (the d<commit> directory): the chain fold orders by it
+    tvM.deltaFiles.values.flatten.foreach { f =>
+      val commit = Paths.get(f).getParent.getParent.getFileName.toString
+        .stripPrefix("d").toLong
+      val seqs = spark.read.parquet(f).select("__seq").distinct()
+        .collect().map(_.getLong(0)).toSeq
+      assert(seqs == Seq(commit), s"$f carries __seq $seqs")
+    }
     // the same chains through the over-threshold SMJ fallback
     val saved = DstTable.DeltaBroadcastMaxBytes
     DstTable.DeltaBroadcastMaxBytes = 0L

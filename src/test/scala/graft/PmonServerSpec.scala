@@ -21,6 +21,9 @@ class PmonServerSpec extends AnyFunSuite {
     val m = new EngineMetrics
     m.addMods(3, 42L)
     m.lastQuorumWaitMs.set(7)
+    m.codegenCompiles.set(3)
+    m.codegenCompileNs.set(2500000L)
+    m.codegenCacheUndersized.set(1)
     @volatile var ready = false
     val srv = PmonServer.start(0, m, () => ready)
     try {
@@ -30,6 +33,9 @@ class PmonServerSpec extends AnyFunSuite {
       assert(mb.contains("graft_quorum_waiting_latency_ms 7"))
       assert(mb.contains("graft_stream_3_modifications 42"))
       assert(mb.contains("graft_mps"))
+      assert(mb.contains("graft_codegen_compiles_total 3\n"))
+      assert(mb.contains("graft_codegen_compile_ms_total 2\n"))
+      assert(mb.contains("graft_codegen_cache_undersized 1\n"))
 
       assert(get(srv.boundPort, "/readyz")._1 == 503)
       ready = true
@@ -87,6 +93,11 @@ class PmonServerSpec extends AnyFunSuite {
     e.processBatch(frame(("""{"resolved":[3,0]}""", 3L)), 1L)
     assert(e.metrics.snapshot("stream_7_modifications") == 2L)
     assert(e.metrics.mps == 0.0)
+    // GraftSession sizes the codegen cache for the engine
+    val s1 = e.metrics.snapshot
+    assert(s1("codegen_cache_undersized") == 0L)
+    assert(s1("codegen_compiles_total") >= 0L)
+    assert(s1("codegen_compile_ms_total") >= 0L)
   }
 
   test("engine bootstrap starts the server when mon_port configured") {
