@@ -124,10 +124,16 @@ final case class EngineConfig(
     buckets: Int = 64,            // destination bucket count
     // The destination is merge-on-read: each commit appends its LWW
     // patch as per-bucket delta files, so steady-state bytes written
-    // per commit scale with the PATCH, not the table. A bucket whose
-    // delta chain reaches this many files is folded
-    // back into its base (the CoW rewrite as compaction primitive),
-    // bounding read amplification; read-side merge work ∝ chain length.
+    // per commit scale with the PATCH, not the table. A bucket is due
+    // when its chain already holds compactDeltas - 1 files: the next
+    // commit folds its base, chain and that commit's patch rows into
+    // new base files instead of appending, so a bucket folds every
+    // compactDeltas-th commit and a chain never outgrows
+    // compactDeltas - 1 files (read amplification; read-side merge
+    // work ∝ chain length). A due bucket folds whether or not the
+    // commit touches it, so an untouched bucket can fold one commit
+    // earlier than a delta-per-commit count would. 1 (or less) folds
+    // every touched bucket at every commit: copy-on-write.
     compactDeltas: Int = 8,
     // ST6 liveness guard (reference max_expected_heartbeat_interval,
     // hb_tracker.go:76-126): warn when no FULL heartbeat set has been

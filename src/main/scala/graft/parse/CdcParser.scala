@@ -46,9 +46,11 @@ object CdcParser {
     * equal from_json(PERMISSIVE) on [[envelopeSchema]]
     * (equivalence-tested in CdcParserSpec incl. malformed shapes),
     * except that ts/resolved elements in [2^63, 2^64) parse as uint64.
+    * A frame of driver rows is parsed in tasks, not by the optimizer
+    * on the driver (GraftShims.onExecutors).
     */
   def parseEnvelope(raw: DataFrame): DataFrame =
-    parseWith(raw,
+    parseWith(org.apache.spark.sql.graft.GraftShims.onExecutors(raw),
       graft.functions.NativeExpressions.cdcEnvelopeNative(col("value")))
 
   /** from_json twin, kept for the equivalence spec (it rejects

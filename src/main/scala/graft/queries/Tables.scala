@@ -37,16 +37,17 @@ object Tables {
   val SpreadTargetBytesKey = "spark.graft.scan.spreadTargetBytes"
 
   /** (row groups, compressed bytes, uncompressed bytes) per parquet
-    * FILE SET — footer-count metadata, memoized under a key derived
-    * from the listing itself (path, file count, total length, max
-    * mtime), so an in-place rewrite of the path within one JVM
-    * invalidates the entry naturally instead of serving a stale
-    * census (r17 advice; the listing is re-done per load — cheap FS
-    * metadata — only the footer reads are memoized). Metadata only:
-    * no data or results are cached across queries.
+    * FILE SET — footer-count metadata, memoized per path together
+    * with the signature of the listing it was taken from (file count,
+    * total length, max mtime), so an in-place rewrite of the path
+    * within one JVM replaces the entry instead of serving a stale
+    * census or leaking the old one (the listing is re-done per load —
+    * cheap FS metadata — only the footer reads are memoized; the map
+    * holds one entry per path). Metadata only: no data or results are
+    * cached across queries.
     */
   private val rowGroupCensus =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Long)]()
+    new java.util.concurrent.ConcurrentHashMap[String, (String, (Long, Long, Long))]()
 
   private def censusOf(spark: SparkSession,
       path: String): (Long, Long, Long) = {
@@ -60,22 +61,25 @@ object Tables {
       else Array(fs.getFileStatus(hp))
     val bytes = files.map(_.getLen).sum
     val maxM = if (files.isEmpty) 0L else files.map(_.getModificationTime).max
-    val sig = s"$path|${files.length}|$bytes|$maxM"
-    rowGroupCensus.computeIfAbsent(sig, { _ =>
-      var groups = 0L
-      var unc = 0L
-      files.foreach { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, hconf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val gs = r.getRowGroups
-          groups += gs.size.toLong
-          gs.forEach(g => unc += g.getTotalByteSize)
-        } finally r.close()
+    val sig = s"${files.length}|$bytes|$maxM"
+    rowGroupCensus.compute(path, { (_, prior) =>
+      if (prior != null && prior._1 == sig) prior
+      else {
+        var groups = 0L
+        var unc = 0L
+        files.foreach { st =>
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromStatus(st, hconf)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try {
+            val gs = r.getRowGroups
+            groups += gs.size.toLong
+            gs.forEach(g => unc += g.getTotalByteSize)
+          } finally r.close()
+        }
+        (sig, (groups, bytes, unc))
       }
-      (groups, bytes, unc)
-    })
+    })._2
   }
 
   /** Unsplittable-input guard (optimization guide §2.5: "one huge

@@ -173,19 +173,35 @@ object TransactionalStore {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Garbage-collect files no commit can reach: data/pending files not
-    * referenced by the CURRENT manifest, and manifests older than
-    * `keepManifests` versions. Safe w.r.t. concurrent readers that
-    * resolve MANIFEST first, as long as they finish within the
-    * retention window — the same contract as Delta/Iceberg vacuum.
-    * Returns the number of files deleted.
+  /** Garbage-collect files no retained commit can reach: data and
+    * pending files referenced by none of the manifests vacuum keeps
+    * (the head and the `keepManifests` versions before it), and the
+    * manifests older than that. Every retained version stays readable
+    * through [[readAt]] — a fold rewrites a bucket's base into a new
+    * dir, so the head alone does not name the files an older retained
+    * version reads. Safe w.r.t. concurrent readers that resolve
+    * MANIFEST first, as long as they finish within the retention
+    * window — the same contract as Delta/Iceberg vacuum. Returns the
+    * number of files deleted.
     */
   def vacuum(root: String, keepManifests: Int = 10): Int = {
-    val man = read(root)
-    val live: Set[Path] =
-      (man.tables.values.flatMap(tv =>
+    val head = read(root).version
+    val manifests = Files.list(Paths.get(root, "manifest")).iterator().asScala
+      .map(f => f -> f.getFileName.toString)
+      .collect { case (f, n) if n.startsWith("v") && n.endsWith(".json") =>
+        f -> n.stripPrefix("v").stripSuffix(".json").toLong }
+      .toSeq
+    val expired = manifests.filter(_._2 < head - keepManifests)
+    // a manifest above the head is a torn commit: never visible, and
+    // its files are not live
+    val live: Set[Path] = manifests.filter { case (_, v) =>
+      v >= head - keepManifests && v <= head
+    }.flatMap { case (_, v) =>
+      val m = readAt(root, v)
+      m.tables.values.flatMap(tv =>
         tv.bucketFiles.values.flatten ++ tv.deltaFiles.values.flatten) ++
-        man.pendingFiles).map(f => Paths.get(f).toAbsolutePath.normalize).toSet
+        m.pendingFiles
+    }.map(f => Paths.get(f).toAbsolutePath.normalize).toSet
     var deleted = 0
     def sweep(dir: Path): Unit =
       if (Files.isDirectory(dir))
@@ -201,14 +217,7 @@ object TransactionalStore {
         }
     sweep(Paths.get(root, "tables"))
     sweep(Paths.get(root, "pending"))
-    val mdir = Paths.get(root, "manifest")
-    Files.list(mdir).iterator().asScala.toSeq.foreach { f =>
-      val name = f.getFileName.toString
-      if (name.startsWith("v") && name.endsWith(".json")) {
-        val v = name.stripPrefix("v").stripSuffix(".json").toLong
-        if (v < man.version - keepManifests) { Files.delete(f); deleted += 1 }
-      }
-    }
+    expired.foreach { case (f, _) => Files.delete(f); deleted += 1 }
     deleted
   }
 

@@ -638,19 +638,26 @@ final class CdcEngine(
       val tableFuts = tables.toSeq.map { case (tid, meta) =>
         meta.name -> Future {
           val patch = merged.filter(col("tableId") === tid)
-          val (tv, n) = DstTable.applyPatch(spark, root, meta,
+          val (tv, n, foldNs) = DstTable.applyPatch(spark, root, meta,
             cfg.buckets, man.tables(meta.name), patch, commitTag,
-            mergeOnRead = true, compactDeltas = cfg.compactDeltas)
+            compactDeltas = cfg.compactDeltas)
           metrics.addMods(tid, n)
-          tv
+          (tv, foldNs)
         }
       }
+      var foldNs = 0L
       val newTables = tableFuts.foldLeft(man.tables) { case (acc, (name, f)) =>
-        acc.updated(name, Await.result(f, Duration.Inf))
+        val (tv, ns) = Await.result(f, Duration.Inf)
+        foldNs += ns
+        acc.updated(name, tv)
       }
       val tApply = sub()
       val restFiles = Await.result(restFut, Duration.Inf)
-      log(f"applyCut v$commitTag apply=$tApply%.2f rest=${sub()}%.2f")
+      metrics.foldNs.addAndGet(foldNs)
+      // fold = the tables' fold jobs summed (they run concurrently
+      // inside apply)
+      log(f"applyCut v$commitTag apply=$tApply%.2f fold=${foldNs / 1e9}%.2f " +
+        f"rest=${sub()}%.2f")
       man.copy(
         state = man.state.copy(stepId = newPos.step, txId = newPos.txId,
           stage = newStage),

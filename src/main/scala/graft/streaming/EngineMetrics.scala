@@ -29,6 +29,10 @@ final class EngineMetrics {
     */
   val deltaFilesLive = new AtomicLong(0)
   val bucketsCompacted = new AtomicLong(0)
+  /** Wall time of the commits' fold jobs (due buckets rewritten into
+    * base), summed over tables and commits.
+    */
+  val foldNs = new AtomicLong(0)
   /** Generated classes compiled during batches, and their compile
     * time, summed over batches. A warm batch compiles nothing; a
     * steady climb means the codegen cache evicts the engine's classes
@@ -80,6 +84,7 @@ final class EngineMetrics {
     "hb_liveness_warnings" -> hbLivenessWarnings.get(),
     "delta_files_live" -> deltaFilesLive.get(),
     "buckets_compacted" -> bucketsCompacted.get(),
+    "fold_ms_total" -> foldNs.get() / 1000000L,
     "codegen_compiles_total" -> codegenCompiles.get(),
     "codegen_compile_ms_total" -> codegenCompileNs.get() / 1000000L,
     "codegen_cache_undersized" -> codegenCacheUndersized.get()

@@ -660,5 +660,13 @@ class CdcEngineSpec extends SparkSpec {
     assert(compiles == 0L, s"warm batch compiled $compiles generated classes")
     assert(e.metrics.codegenCompiles.get() == total0)
     assert(users(e) == Map(1L -> (("n5", null)), 2L -> ((null, 5))))
+    // and a warm compacting batch: the fold's plan is the same every
+    // time, so it compiles nothing either
+    val folds0 = e.metrics.foldNs.get()
+    val foldCompiles = batch(6L)
+    assert(e.metrics.bucketsCompacted.get() > compacted0)
+    assert(e.metrics.foldNs.get() > folds0)
+    assert(foldCompiles == 0L, s"warm fold compiled $foldCompiles generated classes")
+    assert(users(e) == Map(1L -> (("n6", null)), 2L -> ((null, 6))))
   }
 }

@@ -24,6 +24,7 @@ class PmonServerSpec extends AnyFunSuite {
     m.codegenCompiles.set(3)
     m.codegenCompileNs.set(2500000L)
     m.codegenCacheUndersized.set(1)
+    m.foldNs.set(4200000L)
     @volatile var ready = false
     val srv = PmonServer.start(0, m, () => ready)
     try {
@@ -36,6 +37,7 @@ class PmonServerSpec extends AnyFunSuite {
       assert(mb.contains("graft_codegen_compiles_total 3\n"))
       assert(mb.contains("graft_codegen_compile_ms_total 2\n"))
       assert(mb.contains("graft_codegen_cache_undersized 1\n"))
+      assert(mb.contains("graft_fold_ms_total 4\n"))
 
       assert(get(srv.boundPort, "/readyz")._1 == 503)
       ready = true
