@@ -4,6 +4,15 @@ import org.apache.spark.sql.SparkSession
 
 /** Standard session factory: every entry point (Verify, Bench, tests)
   * builds its session here so configs stay consistent.
+  *
+  * It also replaces Hadoop's `file:` FileSystem with
+  * [[ForkFreeLocalFileSystem]]: without the Hadoop native library
+  * (Spark does not ship it) the stock one forks a `chmod` process for
+  * every file, `.crc` sidecar and directory it writes — about 100 per
+  * CDC engine commit, 1.5 ms each. Hadoop caches FileSystems without
+  * their conf, so this holds only when the JVM's first `file:`
+  * FileSystem is created through a session built here;
+  * `CdcEngine.bootstrap` reports a forking one.
   */
 object GraftSession {
   def builder(cores: String): SparkSession.Builder =
@@ -29,6 +38,8 @@ object GraftSession {
       // (pairs with DuckDB's epoch_ns on the oracle side).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config(CodegenCacheKey, CodegenCacheEntries.toString)
+      .config(ForkFreeLocalFileSystem.ConfKey,
+        classOf[ForkFreeLocalFileSystem].getName)
 
   /** Spark's JVM-wide cache of compiled generated classes: a static
     * conf, read once when the JVM first generates code. At its default

@@ -4,6 +4,7 @@ import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftShims
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -712,7 +713,7 @@ object Dedup {
       }
       if (cached != null) cached.unpersist()
       cached = next
-      labels = spark.createDataFrame(next.rdd, next.schema)
+      labels = GraftShims.lineageLeaf(next)
     }
     }
     symSelf.unpersist()

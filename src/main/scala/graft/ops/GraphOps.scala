@@ -3,6 +3,7 @@ package graft.ops
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftShims
 
 /** Graph analytics over corpus-derived relationship graphs. The
   * curation use case: rank SOURCES (hosts, crawls, feeds) by how
@@ -198,7 +199,7 @@ object GraphOps {
       next.persist().count()
       if (cached != null) cached.unpersist()
       cached = next
-      pr = spark.createDataFrame(next.rdd, next.schema)
+      pr = GraftShims.lineageLeaf(next)
     }
     }
     // hand back a frame that owns its data WITHOUT funneling it

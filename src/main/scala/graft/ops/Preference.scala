@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftShims
 import org.apache.spark.sql.types._
 
 /** Pairwise-preference aggregation — the RLHF-data primitive: given a
@@ -215,7 +216,7 @@ object Preference {
               .otherwise(dfloor(col("wins").cast(dec) * qLit,
                 col("den"))).as("raw"))
         raw.persist()
-        val rawCut = spark.createDataFrame(raw.rdd, raw.schema)
+        val rawCut = GraftShims.lineageLeaf(raw)
         // the normalization collect doubles as the cache
         // materializer — one driver action per round, not two; the
         // PREVIOUS round's pin is released only after it runs (this

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftShims
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column.
@@ -266,7 +267,7 @@ object Similarity {
         next.count()
         cached.unpersist()
         cached = next
-        state = spark.createDataFrame(next.rdd, next.schema)
+        state = GraftShims.lineageLeaf(next)
       }
     }
     cached.unpersist()
@@ -626,7 +627,7 @@ object Similarity {
       next.count() // materialize BEFORE dropping the cache it reads
       if (cached != null) cached.unpersist()
       cached = next
-      assigned = spark.createDataFrame(next.rdd, next.schema)
+      assigned = GraftShims.lineageLeaf(next)
     }
     cached
   }

@@ -77,6 +77,15 @@ final class HeartbeatTracker(expected: Set[(Int, Long)]) {
   def lastHb(tableId: Int, partitionId: Long): Option[Position] =
     slots.get((tableId, partitionId))
 
-  /** Snapshot for logging/metrics. */
+  /** Snapshot for logging/metrics, and for [[restore]]. */
   def snapshot: Map[(Int, Long), Position] = slots.toMap
+
+  /** Put every slot back to a [[snapshot]]: a batch that fails before
+    * its commit undoes the heartbeats it added and the quorum it
+    * evicted. O(#partitions).
+    */
+  def restore(s: Map[(Int, Long), Position]): Unit = {
+    slots.clear()
+    slots ++= s
+  }
 }

@@ -7,6 +7,7 @@ import graft.parse.CdcParser
 import graft.sink.{DstTable, TableMeta, TransactionalStore}
 import graft.functions.GraftFunctions.{serializeKey, ux}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.GraftShims
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -51,6 +52,14 @@ final class CdcEngine(
     strategyByTable.collect { case (t, ProblemStrategy.CmdQueue) => t }.toSeq
   private val anyCmdQueue: Boolean = cmdQueueIds.nonEmpty
   private val tracker = new HeartbeatTracker(expectedParts)
+  /** Shuffle width of the pre-emission phase (the parse cache, the
+    * working-set cache and the fused heartbeat/stat job): the session's
+    * default parallelism rounded up to a power of two. A per-engine
+    * constant, so the phase's generated code compiles once; never the
+    * session's `spark.sql.shuffle.partitions`, which may be 200.
+    */
+  private val preEmissionWidth =
+    pow2Ceil(spark.sparkContext.defaultParallelism)
 
   /** ST6 gauges: when the engine started waiting for a quorum
     * (-1 = not waiting), and when a full heartbeat set was last seen.
@@ -104,7 +113,21 @@ final class CdcEngine(
     cfg.monPort.foreach(startMonitoring)
     checkCodegenCache(
       spark.conf.get(graft.GraftSession.CodegenCacheKey).toInt)
+    checkLocalFs(org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration))
   }
+
+  /** Warn when `fs`, the session's `file:` FileSystem, forks a process
+    * per written file: every commit then pays about 100 forks.
+    */
+  private def checkLocalFs(fs: org.apache.hadoop.fs.FileSystem): Unit =
+    if (graft.ForkFreeLocalFileSystem.forksPerFile(fs)) {
+      metrics.localFsForking.set(1L)
+      log(s"WARN the file: FileSystem (${fs.getClass.getName}) forks a chmod " +
+        "process per written file without the Hadoop native library " +
+        s"(set ${graft.ForkFreeLocalFileSystem.ConfKey} before the JVM's " +
+        "first file: FileSystem is created: build the session with GraftSession)")
+    } else metrics.localFsForking.set(0L)
 
   /** Warn when a codegen cache of `entries` cannot hold this engine's
     * generated classes: every batch would then recompile its plans.
@@ -200,117 +223,139 @@ final class CdcEngine(
       tp = now
     }
 
-    // dead-letter malformed frames. Stop/Continue defer the write
-    // behind the malformed count that rides the heartbeat-maxima
-    // aggregation (one fused full-scan job), so the common
-    // zero-malformed batch spends NO job here; CmdQueue writes
-    // eagerly because its command resolution must settle before
-    // emission anyway.
-    val parsedCached = CdcParser.parseEnvelope(raw).persist()
-    def writeMalformedDlq(): Unit =
-      appendDlq(CdcParser.malformed(parsedCached)
-        .withColumn("reason", lit("malformed")))
-    if (anyCmdQueue) writeMalformedDlq()
+    // The driver-side heartbeat state this batch may advance before
+    // its commit; a throw before the manifest swap restores it, so a
+    // retry of the same frame does not see its own changes as late.
+    val trackerBefore = tracker.snapshot
+    val syncTargetBefore = syncTarget
+    var committed = false
+
+    var parsedCached: DataFrame = null
     var cleanupFn: () => Unit = () => ()
     val releaseCaches = scala.collection.mutable.ListBuffer.empty[() => Unit]
     try {
-      // Lineage cut (see the pending-set cut below for the rationale):
-      // everything downstream of the parse plans over a LogicalRDD
-      // leaf; only the fused heartbeat-maxima/malformed-count job
-      // re-plans the full source→parse pipeline, once.
-      val parsed = spark.createDataFrame(parsedCached.rdd,
-        parsedCached.schema)
+      // Pre-emission: the parse cache, the working-set cache and the
+      // one fused job that fills both are planned with AQE off at a
+      // fixed width (see preEmissionWidth), so the collect below runs
+      // as ONE job instead of one job per adaptive query stage.
+      val (pendingAll, statRow) = withLowLatency(true, preEmissionWidth) {
+        // dead-letter malformed frames. Stop/Continue defer the write
+        // behind the malformed count that rides the heartbeat-maxima
+        // aggregation (one fused full-scan job), so the common
+        // zero-malformed batch spends NO job here; CmdQueue writes
+        // eagerly because its command resolution must settle before
+        // emission anyway.
+        val pc = CdcParser.parseEnvelope(raw).persist()
+        parsedCached = pc
+        def writeMalformedDlq(): Unit =
+          appendDlq(CdcParser.malformed(pc)
+            .withColumn("reason", lit("malformed")))
+        if (anyCmdQueue) writeMalformedDlq()
+        // Lineage cut: everything downstream of the parse plans over an
+        // RDD leaf of the parse cache's internal rows (see the working
+        // -set cut at the end of this block for the rationale).
+        val parsed = GraftShims.lineageLeaf(pc)
 
-      // checkpoint filter (P3): drop already-applied positions at ingest
-      val changesAll = CdcParser.changes(parsed)
-        .filter(BatchOrder.posGt(col("step"), col("txId"), checkpoint))
-      val hbs = CdcParser.heartbeats(parsed)
-        .filter(BatchOrder.posGt(col("step"), col("txId"), checkpoint))
-      phase("parse+dlq")
+        // checkpoint filter (P3): drop already-applied positions at ingest
+        val changesAll = CdcParser.changes(parsed)
+          .filter(BatchOrder.posGt(col("step"), col("txId"), checkpoint))
+        val hbs = CdcParser.heartbeats(parsed)
+          .filter(BatchOrder.posGt(col("step"), col("txId"), checkpoint))
+        phase("parse+dlq")
 
-      // per-partition order verification (P4/ST3). No job runs here:
-      // the late-count rides an Observation through the working-set
-      // materializer (the SOLE pre-emission action whose plan contains
-      // the CollectMetrics node), and the gate fires before anything
-      // commits.
-      val carried = trackerSnapshotDF()
-      val tagged = BatchOrder.tagLate(changesAll, hbs, carried)
-      val Resolved(changes, lateGate, cleanup) = resolveLate(tagged)
-      cleanupFn = cleanup
-      phase("order-verify")
+        // per-partition order verification (P4/ST3). No job runs here:
+        // the late-count rides an Observation through the working-set
+        // materializer (the SOLE pre-emission action whose plan contains
+        // the CollectMetrics node), and the gate fires before anything
+        // commits.
+        val carried = trackerSnapshotDF()
+        val tagged = BatchOrder.tagLate(changesAll, hbs, carried)
+        val Resolved(changes, lateGate, cleanup) = resolveLate(tagged)
+        cleanupFn = cleanup
+        phase("order-verify")
 
-      // key filter (P5): blocked keys are a broadcast anti-join
-      // (bloom-split above the size gate; its cache joins the batch's
-      // release list)
-      val filtered = applyKeyFilter(changes, f => { releaseCaches += f; () })
-      phase("key-filter")
+        // key filter (P5): blocked keys are a broadcast anti-join
+        // (bloom-split above the size gate; its cache joins the batch's
+        // release list)
+        val filtered = applyKeyFilter(changes, f => { releaseCaches += f; () })
+        phase("key-filter")
 
-      // Working-set declaration. Everything below needs only the
-      // pre-batch tracker snapshot (already captured in `carried`), so
-      // its stats ride the same fused pre-emission job as heartbeat
-      // tracking.
-      val incoming = filtered.select(pendingSchema.fieldNames.map(col): _*)
-      val unioned = pendingDF(man).unionByName(incoming)
-      val pendingCached = (if (batchId > man.lastBatchId) unioned
-        else unioned.dropDuplicates("tableId", "partitionId", "offset"))
-        .persist()
-      releaseCaches += (() => { pendingCached.unpersist(); () })
+        // Working-set declaration. Everything below needs only the
+        // pre-batch tracker snapshot (already captured in `carried`), so
+        // its stats ride the same fused pre-emission job as heartbeat
+        // tracking.
+        val incoming = filtered.select(pendingSchema.fieldNames.map(col): _*)
+        val unioned = pendingDF(man).unionByName(incoming)
+        val pendingCached = (if (batchId > man.lastBatchId) unioned
+          else unioned.dropDuplicates("tableId", "partitionId", "offset"))
+          .persist()
+        releaseCaches += (() => { pendingCached.unpersist(); () })
 
-      // ONE full-scan job for everything the batch must know before
-      // emission — the per-partition heartbeat maxima fused with the
-      // malformed count (over the parse) UNIONED with the working-set
-      // stats (count + max(position) + min(ux step) over the pending
-      // cache). A single action means:
-      //  - the late-count Observation completes exactly once with
-      //    full counts (the old two-racing-futures shape could not
-      //    put the malformed count on an Observation precisely
-      //    because a concurrent job filling the same cache would
-      //    complete it partially — with one action the hazard is
-      //    gone);
-      //  - the parse cache is materialized by the same job that
-      //    consumes it (the union's two branches share the cached
-      //    parse blocks; independent stages still run concurrently
-      //    inside the one job);
-      //  - a fixture-sized batch pays ONE job-scheduling floor here,
-      //    not two. The phase label says what the time IS: the
-      //    one-time JSON parse + the pre-emission aggregates — the
-      //    old log filed all of it under "hb-track" and pointed the
-      //    profile at the wrong suspect (driver-side tracking is
-      //    microseconds).
-      val hbAgg =
-        BatchOrder.partitionMaximaWithMalformed(parsed, checkpoint)
-      val statAgg = pendingCached.agg(
-        count(lit(1)).as("n"),
-        max(struct(ux(col("step")).as("s"), ux(col("txId")).as("t"),
-          col("step"), col("txId"))).as("m"),
-        min(ux(col("step"))).as("mn"))
-      val hbT = org.apache.spark.sql.types.StructType(hbAgg.schema.fields)
-      val stT = org.apache.spark.sql.types.StructType(statAgg.schema.fields)
-      val fusedRows = hbAgg
-        .select(struct(col("*")).as("hb"), lit(null).cast(stT).as("st"))
-        .unionByName(statAgg.select(
-          lit(null).cast(hbT).as("hb"), struct(col("*")).as("st")))
-        .collect()
-      var nMalformed = 0L
-      var statRow: org.apache.spark.sql.Row = null
-      fusedRows.foreach { r =>
-        if (!r.isNullAt(0)) {
-          val hb = r.getStruct(0)
-          nMalformed += hb.getAs[Long]("nMal")
-          if (!hb.isNullAt(hb.fieldIndex("step")))
-            tracker.add(hb.getAs[Int]("tableId"),
-              hb.getAs[Long]("partitionId"),
-              Position(hb.getAs[Long]("step"), hb.getAs[Long]("txId")))
-        } else statRow = r.getStruct(1)
+        // ONE full-scan job for everything the batch must know before
+        // emission — the per-partition heartbeat maxima fused with the
+        // malformed count (over the parse) UNIONED with the working-set
+        // stats (count + max(position) + min(ux step) over the pending
+        // cache). A single action means:
+        //  - the late-count Observation completes exactly once with
+        //    full counts (the old two-racing-futures shape could not
+        //    put the malformed count on an Observation precisely
+        //    because a concurrent job filling the same cache would
+        //    complete it partially — with one action the hazard is
+        //    gone);
+        //  - the parse cache is materialized by the same job that
+        //    consumes it (the union's two branches share the cached
+        //    parse blocks; independent stages still run concurrently
+        //    inside the one job);
+        //  - a fixture-sized batch pays ONE job-scheduling floor here,
+        //    not two. The phase label says what the time IS: the
+        //    one-time JSON parse + the pre-emission aggregates — the
+        //    old log filed all of it under "hb-track" and pointed the
+        //    profile at the wrong suspect (driver-side tracking is
+        //    microseconds).
+        val hbAgg =
+          BatchOrder.partitionMaximaWithMalformed(parsed, checkpoint)
+        val statAgg = pendingCached.agg(
+          count(lit(1)).as("n"),
+          max(struct(ux(col("step")).as("s"), ux(col("txId")).as("t"),
+            col("step"), col("txId"))).as("m"),
+          min(ux(col("step"))).as("mn"))
+        val hbT = org.apache.spark.sql.types.StructType(hbAgg.schema.fields)
+        val stT = org.apache.spark.sql.types.StructType(statAgg.schema.fields)
+        val fusedRows = hbAgg
+          .select(struct(col("*")).as("hb"), lit(null).cast(stT).as("st"))
+          .unionByName(statAgg.select(
+            lit(null).cast(hbT).as("hb"), struct(col("*")).as("st")))
+          .collect()
+        var nMalformed = 0L
+        var statRow: org.apache.spark.sql.Row = null
+        fusedRows.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val hb = r.getStruct(0)
+            nMalformed += hb.getAs[Long]("nMal")
+            if (!hb.isNullAt(hb.fieldIndex("step")))
+              tracker.add(hb.getAs[Int]("tableId"),
+                hb.getAs[Long]("partitionId"),
+                Position(hb.getAs[Long]("step"), hb.getAs[Long]("txId")))
+          } else statRow = r.getStruct(1)
+        }
+        phase("parse-scan-agg")
+
+        // deferred malformed DLQ write — still before emission and any
+        // commit
+        if (!anyCmdQueue && nMalformed > 0L)
+          writeMalformedDlq()
+        // the order gate fires HERE — the materializer full-scanned the
+        // observed subtree, and nothing has committed or mutated yet
+        lateGate()
+        // Lineage cut: every emission action plans over an RDD leaf of
+        // the working-set cache's internal rows instead of the full
+        // source→parse→union tree. The RDD keeps its recompute lineage
+        // (fault-tolerant) and scans the cache populated above; the
+        // driver stops re-analyzing the whole pipeline for each of the
+        // ~6 jobs emission runs, and no row is converted to an external
+        // Row and back on the way.
+        (GraftShims.lineageLeaf(pendingCached), statRow)
       }
-      phase("parse-scan-agg")
-      // deferred malformed DLQ write — still before emission and any
-      // commit
-      if (!anyCmdQueue && nMalformed > 0L)
-        writeMalformedDlq()
-      // the order gate fires HERE — the materializer full-scanned the
-      // observed subtree, and nothing has committed or mutated yet
-      lateGate()
       // newest heartbeat BEFORE quorum eviction — feeds the lag gauge
       val newestHb = tracker.maxHb
 
@@ -351,14 +396,6 @@ final class CdcEngine(
       // (Spark assigns each source offset range to exactly one batch
       // id): a replayed frame can re-deliver rows already sitting in
       // the stored pending buffer.
-      //
-      // Lineage cut: every emission action plans over a LogicalRDD
-      // leaf instead of the full source→parse→union tree. The RDD
-      // keeps its recompute lineage (fault-tolerant) and scans the
-      // cache populated above; the driver stops re-analyzing the whole
-      // pipeline for each of the ~6 jobs emission runs — this is what
-      // holds the per-micro-batch fixed floor down.
-      val pendingAll = spark.createDataFrame(pendingCached.rdd, pendingSchema)
       phase("pending-union")
 
       // emission loop (ST2/ST5). Small working sets run in the
@@ -383,6 +420,7 @@ final class CdcEngine(
       TransactionalStore.commit(root, man.copy(version = man.version + 1,
         fencingToken = lock.heldToken.getOrElse(0L),
         lastBatchId = math.max(batchId, man.lastBatchId)))
+      committed = true
       metrics.batchCommitted((System.nanoTime() - t0) / 1000000L)
       // merge-on-read health: live chain files + chains folded away
       // this commit (O(#buckets) driver bookkeeping off the manifest)
@@ -407,21 +445,28 @@ final class CdcEngine(
         f"latency=${(System.nanoTime() - t0) / 1e9}%.3fs " +
         phases.map { case (n, sec) => f"$n=$sec%.2f" }.mkString(" ") +
         f" codegen=${compiles1 - compiles0}/${(compileNs1 - compileNs0) / 1e9}%.2fs")
+    } catch {
+      case t: Throwable if !committed =>
+        tracker.restore(trackerBefore)
+        syncTarget = syncTargetBefore
+        throw t
     } finally {
       cleanupFn()
       releaseCaches.foreach(_())
-      parsedCached.unpersist()
+      if (parsedCached != null) parsedCached.unpersist()
     }
   }
 
   // ---- emission ----
 
-  /** Run `f` with AQE disabled and one shuffle partition — the right
-    * execution regime for a tiny working set, where per-stage adaptive
-    * replanning and 32-way shuffles cost far more wall time than the
-    * data. The engine owns its session while a batch is in flight
-    * (foreachBatch serializes batches), so the temporary session-conf
-    * flip cannot race another engine query.
+  /** Run `f` with AQE disabled and `parts` shuffle partitions — the
+    * right execution regime for a small working set, where per-stage
+    * adaptive replanning and wide shuffles cost far more wall time than
+    * the data, and for the pre-emission phase (see [[preEmissionWidth]]).
+    * Frames cached inside `f` keep the plan made under it. The engine
+    * owns its session while a batch is in flight (foreachBatch
+    * serializes batches), so the temporary session-conf flip cannot
+    * race another engine query.
     */
   private def withLowLatency[T](enable: Boolean, parts: Int = 1)(f: => T): T =
     if (!enable) f
@@ -1007,10 +1052,12 @@ object CdcEngine {
     * similar batches (40k-row catch-up frames span widths 5 to 7) on
     * one width and the whole regime on six.
     */
-  def lowLatencyWidth(rows: Long): Int = {
-    val w = math.min(32L, math.max(1L, rows / 8000L + 1L)).toInt
-    if (w == 1) 1 else Integer.highestOneBit(w - 1) << 1
-  }
+  def lowLatencyWidth(rows: Long): Int =
+    pow2Ceil(math.min(32L, math.max(1L, rows / 8000L + 1L)).toInt)
+
+  /** The least power of two at or above `n` (1 for `n` ≤ 1). */
+  def pow2Ceil(n: Int): Int =
+    if (n <= 1) 1 else Integer.highestOneBit(n - 1) << 1
 
   /** Distinct generated classes an engine with `tables` destination
     * tables compiles and then reuses, from a census: perfbench's

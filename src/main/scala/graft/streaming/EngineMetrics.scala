@@ -44,6 +44,11 @@ final class EngineMetrics {
     * engine's working set of generated classes (set at bootstrap).
     */
   val codegenCacheUndersized = new AtomicLong(0)
+  /** 1 when the session's `file:` FileSystem forks a `chmod` process
+    * per written file (Hadoop's stock one without its native library;
+    * set at bootstrap).
+    */
+  val localFsForking = new AtomicLong(0)
   val lastError = new AtomicReference[String]("")
 
   // modifications of the batch in progress, summed over its applyCuts,
@@ -87,6 +92,7 @@ final class EngineMetrics {
     "fold_ms_total" -> foldNs.get() / 1000000L,
     "codegen_compiles_total" -> codegenCompiles.get(),
     "codegen_compile_ms_total" -> codegenCompileNs.get() / 1000000L,
-    "codegen_cache_undersized" -> codegenCacheUndersized.get()
+    "codegen_cache_undersized" -> codegenCacheUndersized.get(),
+    "local_fs_forking" -> localFsForking.get()
   ) ++ perStreamMods.map { case (k, v) => s"stream_${k}_modifications" -> v.get() }
 }

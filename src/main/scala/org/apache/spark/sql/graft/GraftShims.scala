@@ -8,7 +8,7 @@ import org.apache.spark.sql.classic.{ExpressionUtils, SparkSession}
 /** Bridge to `private[sql]` Spark internals: the Column↔Expression
   * converters — the sanctioned pattern for libraries that define
   * custom Catalyst expressions against Spark 4's column-node API —
-  * and the internal-row DataFrame factory.
+  * and the internal-row DataFrame factory, for the two leaves below.
   */
 object GraftShims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -28,4 +28,18 @@ object GraftShims {
           spark.sparkContext.parallelize(l.data), l.schema)
       case _ => df
     }
+
+  /** `df` as a leaf over the internal rows of its executed plan: a
+    * lineage cut. Plans over the result stop at an RDD leaf instead of
+    * re-analysing and re-optimizing `df`'s whole tree, while the RDD
+    * keeps its recompute lineage (it reads `df`'s cache when `df` is
+    * persisted). Unlike `createDataFrame(df.rdd, df.schema)` it runs
+    * no SQL execution of its own and never converts a row to an
+    * external `Row` and back. Not `ops.Materialize.cut`, which
+    * materializes eagerly and drops the lineage.
+    */
+  def lineageLeaf(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession.asInstanceOf[SparkSession]
+    spark.internalCreateDataFrame(df.queryExecution.toRdd, df.schema)
+  }
 }

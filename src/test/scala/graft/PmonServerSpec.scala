@@ -25,6 +25,7 @@ class PmonServerSpec extends AnyFunSuite {
     m.codegenCompileNs.set(2500000L)
     m.codegenCacheUndersized.set(1)
     m.foldNs.set(4200000L)
+    m.localFsForking.set(1)
     @volatile var ready = false
     val srv = PmonServer.start(0, m, () => ready)
     try {
@@ -38,6 +39,7 @@ class PmonServerSpec extends AnyFunSuite {
       assert(mb.contains("graft_codegen_compile_ms_total 2\n"))
       assert(mb.contains("graft_codegen_cache_undersized 1\n"))
       assert(mb.contains("graft_fold_ms_total 4\n"))
+      assert(mb.contains("graft_local_fs_forking 1\n"))
 
       assert(get(srv.boundPort, "/readyz")._1 == 503)
       ready = true
@@ -100,6 +102,8 @@ class PmonServerSpec extends AnyFunSuite {
     assert(s1("codegen_cache_undersized") == 0L)
     assert(s1("codegen_compiles_total") >= 0L)
     assert(s1("codegen_compile_ms_total") >= 0L)
+    // and replaces the file: FileSystem that forks a chmod per file
+    assert(s1("local_fs_forking") == 0L)
   }
 
   test("engine bootstrap starts the server when mon_port configured") {
