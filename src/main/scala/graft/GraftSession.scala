@@ -59,6 +59,31 @@ object GraftSession {
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
     org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
+  /** Run `f` with AQE off and `parts` shuffle partitions, restoring
+    * both settings afterwards: the execution regime for tiny working
+    * sets (the CDC engine's small batches and pre-emission phase, the
+    * operators' fixpoint rounds), where per-stage adaptive re-planning
+    * and wide shuffles cost far more wall time than the data. Frames
+    * cached inside `f` keep the plan made under it. The flip changes
+    * the shared session: the caller must own it for the duration (the
+    * engine serializes its batches; the fixpoint loops run their
+    * rounds' actions on the calling thread).
+    */
+  def withLowLatency[T](spark: SparkSession, parts: Int)(f: => T): T = {
+    val conf = spark.conf
+    val aqe = conf.getOption("spark.sql.adaptive.enabled")
+    val sp = conf.getOption("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    conf.set("spark.sql.shuffle.partitions", parts.toString)
+    try f
+    finally {
+      aqe.fold(conf.unset("spark.sql.adaptive.enabled"))(
+        conf.set("spark.sql.adaptive.enabled", _))
+      sp.fold(conf.unset("spark.sql.shuffle.partitions"))(
+        conf.set("spark.sql.shuffle.partitions", _))
+    }
+  }
+
   def get(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val s = builder(cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -1,10 +1,11 @@
 package graft.ops
 
 import graft.functions.GraftFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftShims
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -522,35 +523,34 @@ object Dedup {
 
   /** Connected components of an undirected edge set (near-duplicate
     * clustering: every document keeps the min doc id of its component
-    * as the canonical representative) by min-label propagation to
-    * fixpoint.
+    * as the canonical representative). Returns (id, comp) as a
+    * PERSISTED frame, so long-lived sessions can `result.unpersist()`
+    * after consuming it.
     *
-    * Scale design: only vertices incident to an edge enter the loop —
+    * Only vertices incident to an edge enter the computation —
     * isolated documents are trivially their own component and join
-    * back at the end — so the iterated state is pair-set-sized, never
-    * corpus-sized. Self-loops are folded into the persisted symmetric
-    * edge list, which makes a round ONE label join + ONE vertex-keyed
-    * min: the previous labels are referenced exactly once (a plan that
-    * referenced them twice — self ∪ neighbors — doubled per round and
-    * went exponential), the join side is broadcast while the driver
-    * -tracked label count stays under `broadcastRows`, and each
-    * round's result is re-planned over a LogicalRDD leaf so plans stay
-    * constant-size across an unbounded loop. No compare join either:
-    * convergence is read off a monotone checksum (labels only ever
-    * decrease, so Σcomp — summed exactly as decimal(38,0) — strictly
-    * falls until the fixpoint), piggybacked on the same job that
-    * materializes the round's cache. Rounds converge in O(component
-    * diameter), and dup clusters are shallow near-cliques. `maxIters`
-    * (far above any real diameter) turns a pathological chain into a
-    * hard error, never a silently-partial clustering. Returns
-    * (id, comp) as the final round's PERSISTED frame, so long-lived
-    * sessions can `result.unpersist()` after consuming it (returning
-    * the loop's LogicalRDD wrapper instead would make that a no-op
-    * and leak the cache for the session).
+    * back at the end — so the state is pair-set-sized, never
+    * corpus-sized. Two routes give identical labels (pinned by
+    * CorpusOpsSpec): union-find on the driver
+    * ([[componentsOnDriver]]) when [[DriverRoute.admit]] accepts the
+    * symmetric edge set (work = its rows), else min-label propagation
+    * to fixpoint ([[componentsByRounds]]).
     */
   def connectedComponents(edges: DataFrame, idA: String, idB: String,
       maxIters: Int = 25, broadcastRows: Long = 4000000L): DataFrame = {
-    val spark = edges.sparkSession
+    val (symSelf, sz) = symmetricEdges(edges, idA, idB)
+    if (DriverRoute.admit(sz.heapBytes(64L), sz.rows))
+      componentsOnDriver(symSelf)
+    else componentsByRounds(symSelf, sz, maxIters, broadcastRows)
+  }
+
+  /** The persisted symmetric edge set (src, dst) with one self-loop
+    * per vertex, and its size. The self-loop rows ARE the vertex set,
+    * so initial labels ride the same cache; the sizing pass that
+    * materializes it also counts them (`extra(0)`, the label rows).
+    */
+  private[graft] def symmetricEdges(edges: DataFrame, idA: String,
+      idB: String): (DataFrame, DriverRoute.Size) = {
     val sym = edges.select(col(idA).as("src"), col(idB).as("dst"))
       .union(edges.select(col(idB).as("src"), col(idA).as("dst")))
       .filter(col("src") =!= col("dst")).distinct()
@@ -558,110 +558,82 @@ object Dedup {
       .union(sym.select(col("src")).distinct()
         .select(col("src"), col("src").as("dst")))
     symSelf.persist()
-    // the self-loop rows ARE the vertex set: initial labels ride the
-    // same cache, and the materializing aggregation ALSO counts the
-    // symmetric edge rows — the per-round shuffle width — so the
-    // round loop's execution regime (FixpointExec) is gated by a
-    // measured size, with no extra job. The same aggregation carries
-    // the summed id bytes (strings only; fixed-width ids are priced
-    // per row), so the driver-route gate below is BYTE-aware with no
-    // extra job either.
+    (symSelf, DriverRoute.size(symSelf, Seq("src", "dst"),
+      count(when(col("src") === col("dst"), 1))))
+  }
+
+  /** Driver route of [[connectedComponents]]: one collect and
+    * union-find in O(E α(E)) instead of O(diameter) rounds of join +
+    * aggregate + collect, each of which costs more in stage scheduling
+    * than a small pair set (measured r17: 3–6 s of near-zero-CPU
+    * stages on a few thousand edges). comp is the component's minimum
+    * id in Spark's order ([[DriverRoute.compareIds]]).
+    */
+  private[graft] def componentsOnDriver(symSelf: DataFrame): DataFrame = {
+    val rows = symSelf.collect()
+    symSelf.unpersist()
+    val ids = new DriverRoute.Interner(rows.length)
+    val parent = new scala.collection.mutable.ArrayBuffer[Int]
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    rows.foreach { r =>
+      val a = ids(r.get(0)); val b = ids(r.get(1))
+      while (parent.length < ids.values.length) parent += parent.length
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(rb) = ra
+    }
+    val vals = ids.values
+    val minOf = new java.util.HashMap[Int, Any]
+    vals.indices.foreach { i =>
+      val r = find(i)
+      val cur = minOf.get(r)
+      if (cur == null || DriverRoute.compareIds(vals(i), cur) < 0)
+        minOf.put(r, vals(i))
+    }
+    val dt = symSelf.schema("src").dataType
+    val schema =
+      StructType(Seq(StructField("id", dt), StructField("comp", dt)))
+    DriverRoute.frameOf(symSelf.sparkSession,
+      vals.indices.map(i => Row(vals(i), minOf.get(find(i)))), schema)
+      .persist()
+  }
+
+  /** Frame route of [[connectedComponents]]: min-label propagation to
+    * fixpoint over the persisted `symSelf` sized as `sz`.
+    *
+    * Self-loops are folded into the edge list, which makes a round ONE
+    * label join + ONE vertex-keyed min: the previous labels are
+    * referenced exactly once (a plan that referenced them twice — self
+    * ∪ neighbors — doubled per round and went exponential), the join
+    * side is broadcast while the driver-tracked label count stays
+    * under `broadcastRows`, and each round's result is re-planned over
+    * a LogicalRDD leaf so plans stay constant-size across an unbounded
+    * loop. No compare join either: convergence is read off a monotone
+    * checksum (labels only ever decrease, so Σcomp — summed exactly as
+    * decimal(38,0) — strictly falls until the fixpoint), piggybacked
+    * on the same job that materializes the round's cache. Rounds
+    * converge in O(component diameter), and dup clusters are shallow
+    * near-cliques. `maxIters` (far above any real diameter) turns a
+    * pathological chain into a hard error, never a silently-partial
+    * clustering. Returns the final round's PERSISTED frame (returning
+    * the loop's LogicalRDD wrapper instead would make `unpersist` a
+    * no-op and leak the cache for the session).
+    */
+  private[graft] def componentsByRounds(symSelf: DataFrame,
+      sz: DriverRoute.Size, maxIters: Int = 25,
+      broadcastRows: Long = 4000000L): DataFrame = {
+    val spark = symSelf.sparkSession
+    val edgeRows = sz.rows
+    var labelRows = sz.extra.getLong(0)
+    val idIsString = symSelf.schema("src").dataType ==
+      org.apache.spark.sql.types.StringType
     var labels: DataFrame = symSelf.filter(col("src") === col("dst"))
       .select(col("src").as("id"), col("src").as("comp"))
-    val idIsString = edges.schema(idA).dataType ==
-      org.apache.spark.sql.types.StringType
-    val idByteAgg =
-      if (idIsString) sum(octet_length(col("src")) + octet_length(col("dst")))
-      else sum(lit(16L))
-    val szRow = symSelf.agg(count(lit(1)),
-      count(when(col("src") === col("dst"), 1)), idByteAgg).head()
-    val edgeRows = szRow.getLong(0)
-    var labelRows = szRow.getLong(1)
-    val idBytes = if (szRow.isNullAt(2)) 0L else szRow.getLong(2)
-
-    // DRIVER ROUTE (the bradleyTerryAuto pattern): while the
-    // symmetric edge set collects comfortably, run union-find on the
-    // driver — one collect + O(E α(E)) replaces O(diameter) rounds of
-    // join + aggregate + collect, each of which costs more in stage
-    // scheduling and broadcast builds than the data (measured r17:
-    // the round loop was 3–6 s of near-zero-CPU stages on pair sets
-    // of a few thousand edges). The label semantics are identical —
-    // comp = the component's minimum id — and the existing
-    // union-find property spec pins the equivalence. Gated by BOTH
-    // spark.graft.cc.driverMaxEdges (rows, default 2M; 0 disables the
-    // route) AND spark.graft.cc.driverMaxBytes (default 256m; 0
-    // disables the byte check): estBytes prices the collected
-    // GenericRow batch — ~64 B of Row/object overhead per edge plus
-    // ~4× the raw id bytes (UTF-16 chars + String headers) — so 2M
-    // edges of long URLs no longer slip through a row-count-only
-    // gate onto a small driver heap. A corpus-scale pair graph fails
-    // both and stays on the frame-based fixpoint below.
-    val driverMax =
-      try spark.conf.get("spark.graft.cc.driverMaxEdges", "2000000").toLong
-      catch { case _: NumberFormatException => 0L }
-    val driverMaxBytes =
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.graft.cc.driverMaxBytes", "256m"))
-      catch { case _: NumberFormatException => 0L }
-    val estBytes = edgeRows * 64L + 4L * idBytes
-    if (driverMax > 0 && edgeRows <= driverMax &&
-        (driverMaxBytes <= 0 || estBytes <= driverMaxBytes)) {
-      val rows = symSelf.collect()
-      symSelf.unpersist()
-      val idx = new java.util.HashMap[Any, Integer](rows.length * 2)
-      val vals = new scala.collection.mutable.ArrayBuffer[Any]
-      def of(v: Any): Int = {
-        val got = idx.get(v)
-        if (got != null) got.intValue()
-        else { idx.put(v, Integer.valueOf(vals.length)); vals += v
-          vals.length - 1 }
-      }
-      val parent = new scala.collection.mutable.ArrayBuffer[Int]
-      def find(x: Int): Int = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      rows.foreach { r =>
-        val a = of(r.get(0)); val b = of(r.get(1))
-        while (parent.length < vals.length) parent += parent.length
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(rb) = ra
-      }
-      // min id per root. String ids MUST compare in Spark's
-      // StringType order — UTF8String byte order, i.e. code-point
-      // order — not Java String.compareTo (UTF-16 code-unit order):
-      // the two disagree when supplementary-plane characters meet
-      // U+E000..U+FFFF, and the frame route's min() would then pick a
-      // different canonical representative (route-equivalence pinned
-      // by the non-BMP case in CorpusOpsSpec). Other id types are
-      // atomic Comparables with engine-identical order (Long/Int).
-      def lt(x: Any, y: Any): Boolean = (x, y) match {
-        case (a: String, b: String) =>
-          org.apache.spark.unsafe.types.UTF8String.fromString(a).compareTo(
-            org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
-        case _ => x.asInstanceOf[Comparable[Any]].compareTo(y) < 0
-      }
-      val minOf = new java.util.HashMap[Int, Any]
-      (0 until vals.length).foreach { i =>
-        val r = find(i)
-        val cur = minOf.get(r)
-        if (cur == null || lt(vals(i), cur)) minOf.put(r, vals(i))
-      }
-      val dt = edges.schema(idA).dataType
-      val outRows: Seq[org.apache.spark.sql.Row] =
-        (0 until vals.length).map { i =>
-          org.apache.spark.sql.Row(vals(i), minOf.get(find(i)))
-        }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", dt),
-        org.apache.spark.sql.types.StructField("comp", dt)))
-      val out = DriverRoute.frameOf(spark, outRows, schema)
-      out.persist()
-      return out
-    }
     var cached: DataFrame = null // the persisted round behind `labels`
     var it = 0
     var prevSum: Option[java.math.BigDecimal] = None

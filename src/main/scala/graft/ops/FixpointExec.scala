@@ -8,51 +8,28 @@ import org.apache.spark.sql.SparkSession
   * per-round ADAPTIVE re-planning and session-width shuffles cost
   * far more wall time than the data (measured r17: AQE off alone is
   * 11–26% off the whole query on the fixpoint-heavy oracle rows).
-  * The same trick the CDC engine ships as `withLowLatency`, hoisted
-  * for the batch operators — and GATED BY MEASURED STATE SIZE so it
-  * is scale-adaptive, not a local-mode constant: a loop whose
-  * shuffled rows exceed [[MaxRowsKey]] (default 2M, conf-able; 0
-  * disables) keeps the session's full AQE + width.
-  *
-  * The conf flip is session-scoped and restored in `finally` — the
-  * same single-driver-thread contract CdcEngine documents (these
-  * loops already run eager per-round actions, so they own the
-  * session while iterating).
+  * The regime is [[graft.GraftSession.withLowLatency]], the one the
+  * CDC engine runs its small batches in, gated by measured state size
+  * with the driver routes' work ceiling ([[DriverRoute.MaxWork]]): a
+  * loop whose per-round shuffle exceeds it keeps the session's full
+  * AQE + width, and reads no setting.
   */
 object FixpointExec {
 
-  val MaxRowsKey = "spark.graft.fixpoint.lowLatMaxRows"
-
   /** Rows per shuffle partition when the regime engages — wide
-    * enough that even the 2M-row ceiling keeps partitions ≥ 100k
-    * rows, so the flip never creates giant single tasks.
+    * enough that even the ceiling keeps partitions ≥ 100k rows, so
+    * the flip never creates giant single tasks.
     */
   private val RowsPerPart = 100000L
 
   /** Run `f` under the low-latency regime when `shuffledRows` (the
     * largest per-round shuffle the loop will do — edge rows for
-    * CC/PR/BT) is known and at most the configured ceiling;
-    * otherwise run `f` unchanged.
+    * CC/PR/BT) is at most [[DriverRoute.MaxWork]]; otherwise run `f`
+    * unchanged.
     */
-  def withTinyRounds[T](spark: SparkSession, shuffledRows: Long)(f: => T): T = {
-    val maxRows =
-      try spark.conf.get(MaxRowsKey, "2000000").toLong
-      catch { case _: NumberFormatException => 0L }
-    if (maxRows <= 0 || shuffledRows > maxRows) return f
-    val parts = math.max(1L, math.min(
+  def withTinyRounds[T](spark: SparkSession, shuffledRows: Long)(f: => T): T =
+    if (shuffledRows > DriverRoute.MaxWork) f
+    else graft.GraftSession.withLowLatency(spark, math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong,
-      shuffledRows / RowsPerPart + 1L)).toInt
-    val conf = spark.conf
-    val aqe = conf.getOption("spark.sql.adaptive.enabled")
-    val sp = conf.getOption("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try f
-    finally {
-      aqe.fold(conf.unset("spark.sql.adaptive.enabled"))(
-        conf.set("spark.sql.adaptive.enabled", _))
-      sp.fold(conf.unset("spark.sql.shuffle.partitions"))(
-        conf.set("spark.sql.shuffle.partitions", _))
-    }
-  }
+      shuffledRows / RowsPerPart + 1L)).toInt)(f)
 }

@@ -1,9 +1,10 @@
 package graft.ops
 
 import graft.functions.GraftFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftShims
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Graph analytics over corpus-derived relationship graphs. The
   * curation use case: rank SOURCES (hosts, crawls, feeds) by how
@@ -61,124 +62,94 @@ object GraphOps {
     * identical trajectory. Nodes are the edge endpoints (an isolated
     * source has no affinity evidence and is the caller's join-back).
     *
-    * Scale shape per round: one equi-join of the edge list against
-    * the node-sized rank frame (AQE broadcasts the rank side while it
-    * fits; both sides already hash-partition on the node key
-    * otherwise) and one map-side-combined aggregation — rounds are
-    * fixed and small, so lineage stays bounded without checkpointing.
-    * Returns (node, pr_e9).
+    * Two routes replay one trajectory bit for bit (pinned by
+    * GraphOpsSpec): [[pageRankOnDriver]] when [[DriverRoute.admit]]
+    * accepts the weighted edge list (work = its rows), else the
+    * distributed rounds of [[pageRankByRounds]]. Returns (node, pr_e9).
     */
   def pageRank(edges: DataFrame, iters: Int,
       damping: Double = 0.85): DataFrame = {
-    val spark = edges.sparkSession
-    // symmetrize (undirected affinity: each endpoint both sends and
-    // receives) and attach each source's out-weight ONCE — the cached
-    // (s, t, w, wt) frame is the only thing the rounds re-read, so
-    // the upstream edge-construction pipeline (shingles, rarity cap,
-    // pair join) runs exactly one time however many rounds follow
+    val (e, sz) = weightedEdges(edges)
+    if (DriverRoute.admit(sz.heapBytes(96L), sz.rows))
+      pageRankOnDriver(e, iters, damping)
+    else pageRankByRounds(e, sz.rows, iters, damping)
+  }
+
+  /** The persisted symmetrized edge list (s, t, w, wt) — each source's
+    * out-weight `wt` attached ONCE, and the only thing the rounds
+    * re-read, so the upstream edge-construction pipeline (shingles,
+    * rarity cap, pair join) runs one time however many rounds follow —
+    * and its size, from the pass that materializes it.
+    */
+  private[graft] def weightedEdges(
+      edges: DataFrame): (DataFrame, DriverRoute.Size) = {
     val sym = edges.select(col("s_a").as("s"), col("s_b").as("t"), col("w"))
       .unionByName(
         edges.select(col("s_b").as("s"), col("s_a").as("t"), col("w")))
     val e = sym.join(sym.groupBy("s").agg(sum(col("w")).as("wt")), "s")
     e.persist()
+    (e, DriverRoute.size(e, Seq("s", "t")))
+  }
+
+  /** Driver route of [[pageRank]] over the persisted `e`: every
+    * transfer replays the frame route's IEEE double chain
+    * (pr·w/wt·1000, damping·c/1000) and Spark's HALF_UP `round(x, 0)`
+    * ([[DriverRoute.roundHalfUp]]), and the incoming sum is an exact
+    * long sum, order-free on both routes.
+    */
+  private[graft] def pageRankOnDriver(e: DataFrame, iters: Int,
+      damping: Double): DataFrame = {
+    val rows = e.select(col("s"), col("t"), col("w").cast("long"),
+      col("wt").cast("long")).collect()
+    e.unpersist()
+    val ids = new DriverRoute.Interner(rows.length)
+    val es = new Array[Int](rows.length)
+    val et = new Array[Int](rows.length)
+    rows.indices.foreach { i =>
+      es(i) = ids(rows(i).get(0)); et(i) = ids(rows(i).get(1))
+    }
+    val ew = rows.map(_.getLong(2))
+    val ewt = rows.map(_.getLong(3))
+    val nn = ids.values.length
+    require(nn > 0, "pageRank needs a non-empty edge list")
+    val baseD = (1.0 - damping) / nn * 1e9
+    val prv = Array.fill(nn)(math.round(1e9 / nn))
+    val contrib = new Array[Long](nn)
+    for (_ <- 1 to iters) {
+      java.util.Arrays.fill(contrib, 0L)
+      var j = 0
+      while (j < es.length) {
+        contrib(et(j)) += DriverRoute.roundHalfUp(
+          prv(es(j)).toDouble * ew(j) / ewt(j) * 1000.0d)
+        j += 1
+      }
+      var v = 0
+      while (v < nn) {
+        prv(v) = DriverRoute.roundHalfUp(baseD + damping * contrib(v) / 1000.0d)
+        v += 1
+      }
+    }
+    val schema = StructType(Seq(StructField("node", e.schema("s").dataType),
+      StructField("pr_e9", LongType)))
+    DriverRoute.frameOf(e.sparkSession,
+      (0 until nn).map(v => Row(ids.values(v), prv(v))), schema)
+  }
+
+  /** Frame route of [[pageRank]] over the persisted `e` of `edgeRows`
+    * rows. Per round: one equi-join of the edge list against the
+    * node-sized rank frame (AQE broadcasts the rank side while it fits;
+    * both sides already hash-partition on the node key otherwise) and
+    * one map-side-combined aggregation, under the fixpoint regime
+    * ([[FixpointExec]]).
+    */
+  private[graft] def pageRankByRounds(e: DataFrame, edgeRows: Long,
+      iters: Int, damping: Double = 0.85): DataFrame = {
+    val spark = e.sparkSession
     val nodes = e.select(col("s")).distinct()
-    val n = nodes.count() // also materializes the edge cache
+    val n = nodes.count()
     require(n > 0, "pageRank needs a non-empty edge list")
     val prInit = math.round(1e9 / n)
     val base = lit((1.0 - damping) / n * 1e9)
-    // per-round shuffle width = the symmetrized edge rows (cheap
-    // aggregation off the just-materialized cache) — gates the round
-    // loop's low-latency regime (FixpointExec) and the driver route.
-    // The same pass sums the raw id bytes (strings only) so the
-    // driver-route gate is BYTE-aware at no extra job.
-    val idIsString = e.schema("s").dataType ==
-      org.apache.spark.sql.types.StringType
-    val idByteAgg =
-      if (idIsString) sum(octet_length(col("s")) + octet_length(col("t")))
-      else sum(lit(16L))
-    val szRow = e.agg(count(lit(1)), idByteAgg).head()
-    val edgeRows = szRow.getLong(0)
-    val idBytes = if (szRow.isNullAt(1)) 0L else szRow.getLong(1)
-
-    // DRIVER ROUTE (the bradleyTerryAuto/connectedComponents
-    // pattern): while the weighted edge list collects comfortably,
-    // iterate on the driver. The trajectory is BIT-IDENTICAL to the
-    // frame route: every transfer replays the same IEEE double chain
-    // (pr·w/wt·1000, damping·c/1000) and the same HALF_UP decimal
-    // rounding Spark's ROUND applies to doubles
-    // (BigDecimal.valueOf(x).setScale(0, HALF_UP)), and the incoming
-    // sum is an exact long sum — order-free on both routes. Gated by
-    // BOTH spark.graft.pagerank.driverMaxEdges (rows, default 2M; 0
-    // disables the route) AND spark.graft.pagerank.driverMaxBytes
-    // (default 256m; 0 disables the byte check): estBytes prices the
-    // collected 4-column GenericRow batch (~96 B Row/weight overhead
-    // per edge + ~4× the raw id bytes for UTF-16 + String headers),
-    // so long string ids can't ride a row-count-only gate onto a
-    // small driver heap. A corpus-scale graph fails both and keeps
-    // the distributed rounds.
-    val driverMax =
-      try spark.conf.get("spark.graft.pagerank.driverMaxEdges",
-        "2000000").toLong
-      catch { case _: NumberFormatException => 0L }
-    val driverMaxBytes =
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.graft.pagerank.driverMaxBytes", "256m"))
-      catch { case _: NumberFormatException => 0L }
-    val estBytes = edgeRows * 96L + 4L * idBytes
-    if (driverMax > 0 && edgeRows <= driverMax &&
-        (driverMaxBytes <= 0 || estBytes <= driverMaxBytes)) {
-      val rows = e.select(col("s"), col("t"), col("w").cast("long"),
-        col("wt").cast("long")).collect()
-      e.unpersist()
-      def roundHalfUp(x: Double): Long =
-        java.math.BigDecimal.valueOf(x)
-          .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
-      val idx = new java.util.HashMap[Any, Integer](rows.length * 2)
-      val vals = new scala.collection.mutable.ArrayBuffer[Any]
-      def of(v: Any): Int = {
-        val got = idx.get(v)
-        if (got != null) got.intValue()
-        else { idx.put(v, Integer.valueOf(vals.length)); vals += v
-          vals.length - 1 }
-      }
-      val es = new Array[Int](rows.length)
-      val et = new Array[Int](rows.length)
-      val ew = new Array[Long](rows.length)
-      val ewt = new Array[Long](rows.length)
-      var i = 0
-      rows.foreach { r =>
-        es(i) = of(r.get(0)); et(i) = of(r.get(1))
-        ew(i) = r.getLong(2); ewt(i) = r.getLong(3); i += 1
-      }
-      val nn = vals.length
-      require(nn > 0, "pageRank needs a non-empty edge list")
-      val baseD = (1.0 - damping) / nn * 1e9
-      val prv = Array.fill(nn)(math.round(1e9 / nn))
-      val contrib = new Array[Long](nn)
-      for (_ <- 1 to iters) {
-        java.util.Arrays.fill(contrib, 0L)
-        var j = 0
-        while (j < es.length) {
-          contrib(et(j)) += roundHalfUp(
-            prv(es(j)).toDouble * ew(j) / ewt(j) * 1000.0d)
-          j += 1
-        }
-        var v = 0
-        while (v < nn) {
-          prv(v) = roundHalfUp(baseD + damping * contrib(v) / 1000.0d)
-          v += 1
-        }
-      }
-      val dt = e.schema("s").dataType
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", dt),
-        org.apache.spark.sql.types.StructField("pr_e9",
-          org.apache.spark.sql.types.LongType)))
-      val outRows: Seq[org.apache.spark.sql.Row] = (0 until nn).map(v =>
-        org.apache.spark.sql.Row(vals(v), prv(v)))
-      return DriverRoute.frameOf(spark, outRows, schema)
-    }
-
     var pr = nodes.select(col("s"), lit(prInit).as("pr"))
     var cached: DataFrame = null
     FixpointExec.withTinyRounds(spark, edgeRows) {
@@ -236,98 +207,75 @@ object GraphOps {
     * skew lands on the build side of an equi-join, where AQE handles
     * it, not in the pair generator.
     *
-    * Scale shape: one node-sized degree aggregation, one join to
-    * orient, one self-equi-join on the wedge apex, one semi-join to
-    * close — all on the node/edge key, no all-pairs, nothing collected.
+    * Two routes agree row for row (pinned by GraphOpsSpec):
+    * [[trianglesOnDriver]] when [[DriverRoute.admit]] accepts the
+    * collected edges (work = oriented wedges), else
+    * [[triangleCountFrames]] — one node-sized degree aggregation, one
+    * join to orient, one self-equi-join on the wedge apex, one
+    * semi-join to close, all on the node/edge key, no all-pairs.
     * lcc_e6 = round(2e6·tri/(deg·(deg−1))) (0 when deg < 2) keeps the
     * coefficient engine-exact in integer micro-units.
     * Returns (node, deg, tri, lcc_e6).
     */
   def triangleCount(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    // DRIVER ROUTE (the CC/PageRank pattern): the oriented wedge
-    // enumeration is pure integer/comparator logic — no floats until
-    // the final lcc rounding, which replays Spark's exact
-    // multiply→divide→HALF_UP chain — so a small graph computes on
-    // the driver in one collect instead of ~10 join/aggregate stages
-    // of near-zero CPU (measured r18: the triangle stages of the
-    // affinity queries were a 64-task ladder of scheduling overhead).
-    // Gate: spark.graft.triangles.driverMaxEdges rows (default 2M; 0
-    // disables) AND spark.graft.triangles.driverMaxBytes (default
-    // 256m) over the same byte estimate the CC gate uses. Above the
-    // gate the one sizing pass is wasted — accepted and documented:
-    // the frame route evaluates the edge subtree several times
-    // anyway, and a corpus-scale deployment that never wants the
-    // probe sets driverMaxEdges=0.
-    val driverMax =
-      try spark.conf.get("spark.graft.triangles.driverMaxEdges",
-        "2000000").toLong
-      catch { case _: NumberFormatException => 0L }
-    if (driverMax > 0) {
-      val es = edges.select(col("s_a"), col("s_b")).persist()
-      val idIsString = edges.schema("s_a").dataType ==
-        org.apache.spark.sql.types.StringType
-      val byteAgg =
-        if (idIsString)
-          sum(octet_length(col("s_a")) + octet_length(col("s_b")))
-        else sum(lit(16L))
-      val sz = es.agg(count(lit(1)), byteAgg).head()
-      val eRows = sz.getLong(0)
-      val idBytes = if (sz.isNullAt(1)) 0L else sz.getLong(1)
-      val maxBytes =
-        try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.graft.triangles.driverMaxBytes", "256m"))
-        catch { case _: NumberFormatException => 0L }
-      val estBytes = eRows * 64L + 4L * idBytes
-      if (eRows <= driverMax && (maxBytes <= 0 || estBytes <= maxBytes)) {
-        val rows = es.collect()
-        es.unpersist()
-        return triangleCountDriver(spark, rows,
-          edges.schema("s_a").dataType)
-      }
-      es.unpersist()
+    // the wedge count needs the orientation, which needs the degrees:
+    // the route collects when the edge rows fit (~128 B each with the
+    // adjacency and probe set), then admits on the wedges
+    val es = edges.select(col("s_a"), col("s_b")).persist()
+    val bytes = DriverRoute.size(es, Seq("s_a", "s_b")).heapBytes(128L)
+    val g =
+      if (DriverRoute.admit(bytes, 0L)) Some(new OrientedEdges(es.collect()))
+      else None
+    es.unpersist()
+    g match {
+      case Some(o) if DriverRoute.admit(bytes, o.wedges) =>
+        trianglesOnDriver(edges.sparkSession, o, edges.schema("s_a").dataType)
+      case _ => triangleCountFrames(edges)
     }
-    triangleCountFrames(edges)
   }
 
-  /** Driver replay of [[triangleCountFrames]]' relational algebra,
-    * row for row — degree with multiplicity, (deg, node)-orientation
-    * with Spark's UTF8 string order, value-inequality wedge pairs,
-    * SET-semantics closing probe (the left-semi), and the identical
-    * IEEE multiply→divide→HALF_UP lcc quantization. Equivalence is
-    * pinned by the routes-agree test in GraphOpsSpec.
+  /** Collected (s_a, s_b) rows oriented as [[triangleCountFrames]]
+    * orients them: each edge row points from its (deg, node)-smaller
+    * endpoint, degrees counted with multiplicity, nodes in Spark's
+    * order ([[DriverRoute.compareIds]]).
     */
-  private def triangleCountDriver(spark: org.apache.spark.sql.SparkSession,
-      rows: Array[org.apache.spark.sql.Row],
-      dt: org.apache.spark.sql.types.DataType): DataFrame = {
-    def cmp(x: Any, y: Any): Int = (x, y) match {
-      case (a: String, b: String) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(a).compareTo(
-          org.apache.spark.unsafe.types.UTF8String.fromString(b))
-      case _ => x.asInstanceOf[Comparable[Any]].compareTo(y)
-    }
-    def roundHalfUp(x: Double): Long =
-      java.math.BigDecimal.valueOf(x)
-        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
+  private[graft] final class OrientedEdges(rows: Array[Row]) {
     val deg = new java.util.HashMap[Any, Long]
     rows.foreach { r =>
       deg.merge(r.get(0), 1L, (a, b) => a + b)
       deg.merge(r.get(1), 1L, (a, b) => a + b)
     }
-    // orient each edge row from its (deg, node)-smaller endpoint
     val adj = new java.util.HashMap[Any, scala.collection.mutable.ArrayBuffer[Any]]
     val edSet = new java.util.HashSet[(Any, Any)](rows.length * 2)
     rows.foreach { r =>
       val (a, b) = (r.get(0), r.get(1))
       val (da, db) = (deg.get(a), deg.get(b))
       val (u, v) =
-        if (da < db || (da == db && cmp(a, b) < 0)) (a, b) else (b, a)
+        if (da < db || (da == db && DriverRoute.compareIds(a, b) < 0)) (a, b)
+        else (b, a)
       adj.computeIfAbsent(u,
         _ => scala.collection.mutable.ArrayBuffer.empty[Any]) += v
       edSet.add((u, v))
     }
+    /** The route's work: Σ outdeg·(outdeg−1), the ordered wedges the
+      * enumeration probes (K_200 has 19,900 edges and 2.6M of them).
+      */
+    val wedges: Long = {
+      var w = 0L
+      adj.forEach((_, vs) => w += vs.length.toLong * (vs.length - 1))
+      w
+    }
+  }
+
+  /** Driver route of [[triangleCount]]: replays [[triangleCountFrames]]'
+    * relational algebra row for row — value-inequality wedge pairs,
+    * SET-semantics closing probe (the left-semi), and the identical
+    * IEEE multiply→divide→HALF_UP lcc quantization.
+    */
+  private[graft] def trianglesOnDriver(spark: SparkSession,
+      g: OrientedEdges, dt: DataType): DataFrame = {
     val tri = new java.util.HashMap[Any, Long]
-    adj.forEach { (u, vs) =>
+    g.adj.forEach { (u, vs) =>
       var i = 0
       while (i < vs.length) {
         var j = 0
@@ -335,7 +283,7 @@ object GraphOps {
           // value inequality, like the frame's y =!= z filter; a
           // duplicated input edge duplicates the wedge exactly as the
           // self-join would
-          if (i != j && vs(i) != vs(j) && edSet.contains((vs(i), vs(j)))) {
+          if (i != j && vs(i) != vs(j) && g.edSet.contains((vs(i), vs(j)))) {
             tri.merge(u, 1L, (a, b) => a + b)
             tri.merge(vs(i), 1L, (a, b) => a + b)
             tri.merge(vs(j), 1L, (a, b) => a + b)
@@ -345,30 +293,25 @@ object GraphOps {
         i += 1
       }
     }
-    val outRows = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.Row]
-    deg.forEach { (node, d) =>
+    val outRows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    g.deg.forEach { (node, d) =>
       val t = tri.getOrDefault(node, 0L)
       // replay round(lit(2e6) * tri / (deg * (deg - 1)), 0): multiply
       // first, long product cast to double in the divide, HALF_UP
       val lcc =
-        if (d >= 2L) roundHalfUp(2e6 * t.toDouble / (d * (d - 1L)).toDouble)
+        if (d >= 2L)
+          DriverRoute.roundHalfUp(2e6 * t.toDouble / (d * (d - 1L)).toDouble)
         else 0L
-      outRows += org.apache.spark.sql.Row(node, d, t, lcc)
+      outRows += Row(node, d, t, lcc)
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", dt),
-      org.apache.spark.sql.types.StructField("deg",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("tri",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("lcc_e6",
-        org.apache.spark.sql.types.LongType)))
+    val schema = StructType(StructField("node", dt) +:
+      Seq("deg", "tri", "lcc_e6").map(StructField(_, LongType)))
     DriverRoute.frameOf(spark, outRows.toSeq, schema)
   }
 
   /** The distributed frame formulation of [[triangleCount]] — the
-    * route above the driver gate, and the equivalence reference.
+    * route [[DriverRoute.admit]] refuses, and the equivalence
+    * reference.
     */
   def triangleCountFrames(edges: DataFrame): DataFrame = {
     val und = edges.select(col("s_a").as("s"), col("s_b").as("t"))

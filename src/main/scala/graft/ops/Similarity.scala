@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftShims
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column.
@@ -115,17 +116,47 @@ object Similarity {
     * disagreement at a half-ulp boundary; integers cannot). Returns
     * (q_id, c_id, pick_rank, score_e6), persisted (callers may
     * unpersist after consuming).
+    *
+    * Two routes replay one greedy walk pick for pick (pinned by
+    * SimJoinSpec): [[mmrOnDriver]] when the shortlist holds no null
+    * sim and [[DriverRoute.admit]] accepts the collect (work = the
+    * pair-sim rows, at most shortlist rows × `shortlist`), else the
+    * k-round frame loop of [[mmrByRounds]].
     */
   def mmrDiverseTopK(queries: DataFrame, corpus: DataFrame,
       shortlist: Int, k: Int, lamNum: Int = 1, lamDen: Int = 2): DataFrame = {
     require(k >= 1 && shortlist >= k, s"need shortlist >= k >= 1")
     require(lamDen > 0 && lamNum >= 0 && lamNum <= lamDen,
       s"lam = $lamNum/$lamDen must be in [0,1]")
-    val spark = queries.sparkSession
+    val (short, pair) = mmrShortlist(queries, corpus, shortlist)
+    short.persist()
+    try {
+      // a null sim (zero-norm vector) would need Spark's
+      // nulls-last-desc ordering replayed; such a shortlist keeps the
+      // frame route instead of modeling it — absent from any real
+      // corpus
+      val sz = DriverRoute.size(short, Seq("q_id", "c_id"),
+        count(when(col("sim_e6").isNull, 1)))
+      // a pair row carries one id more than a shortlist row
+      val bytes = sz.heapBytes(128L) * (1L + shortlist)
+      val viaDriver =
+        if (sz.extra.getLong(0) == 0L &&
+            DriverRoute.admit(bytes, sz.rows * shortlist))
+          mmrOnDriver(short, pair, k, lamNum, lamDen)
+        else None
+      viaDriver.getOrElse(mmrByRounds(short, pair, k, lamNum, lamDen))
+    } finally { short.unpersist(); () }
+  }
+
+  /** The MMR inputs: the per-query shortlist (q_id, c_id, sim_e6) and
+    * the candidate-pair sims (q_id, c_id, cb2, sim_cc) over it, both
+    * in micro-units straight off the RAW cosine — rounding the
+    * already-6-decimal-rounded [[knnBrute]] output again would
+    * reintroduce a cross-engine double-rounding hazard.
+    */
+  private[graft] def mmrShortlist(queries: DataFrame, corpus: DataFrame,
+      shortlist: Int): (DataFrame, DataFrame) = {
     def e6(c: Column): Column = round(c * 1000000d, 0).cast("long")
-    // the knnBrute plan, but micro-unit sims straight off the RAW
-    // cosine — rounding the already-6-decimal-rounded knnBrute output
-    // again would reintroduce a cross-engine double-rounding hazard
     val qs = queries.select(col("id").as("q_id"), col("vec").as("q_vec"))
     val cs = corpus.select(col("id").as("c_id"), col("vec").as("c_vec"))
     val ws = Window.partitionBy("q_id").orderBy(col("sim").desc, col("c_id"))
@@ -137,104 +168,84 @@ object Similarity {
       .select(col("q_id"), col("c_id"), e6(col("sim")).as("sim_e6"))
     val cv = short.join(
       corpus.select(col("id").as("c_id"), col("vec")), "c_id")
-    val pair0 = cv.select(col("q_id"), col("c_id"), col("vec").as("va"))
+    val pair = cv.select(col("q_id"), col("c_id"), col("vec").as("va"))
       .join(cv.select(col("q_id"), col("c_id").as("cb2"),
         col("vec").as("vb")), Seq("q_id"))
       .select(col("q_id"), col("c_id"), col("cb2"),
         e6(cosineI(col("va"), col("vb"))).as("sim_cc"))
+    (short, pair)
+  }
 
-    // DRIVER ROUTE (the CC/PageRank pattern): every quantity the k
-    // greedy rounds touch is ALREADY an exact integer (sim_e6 /
-    // sim_cc are materialized longs; the score is pure long
-    // arithmetic), so collecting the shortlist + pair sims and
-    // replaying the argmax walk on the driver is bit-identical by
-    // construction — no float replay needed, unlike PageRank. This
-    // removes the 2 jobs/round × k rounds of window + join scheduling
-    // that dominate wall time when the shortlist is small (r17:
-    // emb_mmr_topk was 10 BNLJ nodes of per-round plans). Gated by
-    // spark.graft.mmr.driverMaxRows (default 1M; 0 disables) against
-    // nQueries·shortlist² — the pair-sim row bound — measured with
-    // one count of the (small by contract) query side; a
-    // million-query corpus fails the gate and keeps the distributed
-    // rounds. Rows carry 3 ids + a long (≤ ~400 B heap each), so the
-    // 1M default bounds the collect at a few hundred MB.
-    val driverMax =
-      try spark.conf.get("spark.graft.mmr.driverMaxRows", "1000000").toLong
-      catch { case _: NumberFormatException => 0L }
-    val nQ = if (driverMax > 0) queries.count() else Long.MaxValue
-    if (driverMax > 0 &&
-        nQ <= driverMax / math.max(1L, shortlist.toLong * shortlist) ) {
-      val shortC = short.persist()
-      val shortRows = shortC.collect()
-      val pairRows = pair0.collect() // reads the shortlist cache
-      shortC.unpersist()
-      // a null sim (zero-norm vector) would need Spark's
-      // nulls-last-desc ordering replayed; fall through to the frame
-      // route instead of modeling it — absent from any real corpus
-      if (shortRows.forall(!_.isNullAt(2)) &&
-          pairRows.forall(!_.isNullAt(3))) {
-        def cmpId(x: Any, y: Any): Int = (x, y) match {
-          case (a: String, b: String) =>
-            // Spark ascending StringType order = UTF8 byte order
-            org.apache.spark.unsafe.types.UTF8String.fromString(a)
-              .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-          case _ => x.asInstanceOf[Comparable[Any]].compareTo(y)
-        }
-        val byQ = shortRows.groupBy(_.get(0))
-        val cc = new java.util.HashMap[(Any, Any, Any), java.lang.Long](
-          pairRows.length * 2)
-        pairRows.foreach(r => cc.put((r.get(0), r.get(1), r.get(2)),
-          java.lang.Long.valueOf(r.getLong(3))))
-        val lamA = lamNum.toLong
-        val lamB = (lamDen - lamNum).toLong
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.sql.Row]
-        byQ.foreach { case (q, rows) =>
-          // (c_id, sim_e6, maxsel)
-          var state = rows.map(r => (r.get(1), r.getLong(2), 0L)).toSeq
-          var i = 1
-          while (i <= k && state.nonEmpty) {
-            // argmax by (score desc, c_id asc) — the window's order
-            var best = state.head
-            var bestScore = lamA * best._2 - lamB * best._3
-            state.tail.foreach { e =>
-              val s = lamA * e._2 - lamB * e._3
-              if (s > bestScore || (s == bestScore && cmpId(e._1, best._1) < 0)) {
-                best = e; bestScore = s
-              }
-            }
-            out += org.apache.spark.sql.Row(q, best._1, i, bestScore)
-            val picked = best._1
-            state = state.flatMap { e =>
-              if (e._1 == picked) None
-              else {
-                // inner-join semantics: an entry with no pair row is
-                // dropped, exactly like the frame route's join (the
-                // cv × cv pair table is complete per query, so this
-                // never fires on well-formed input)
-                val s = cc.get((q, e._1, picked))
-                if (s == null) None
-                else Some((e._1, e._2, math.max(e._3, s.longValue())))
-              }
-            }
-            i += 1
+  /** Driver route of [[mmrDiverseTopK]]: every quantity the k greedy
+    * rounds touch is already an exact integer (sim_e6 and sim_cc are
+    * materialized longs, the score is long arithmetic), so replaying
+    * the argmax walk on the collected shortlist and pair sims is
+    * bit-identical by construction, and removes the 2 jobs per round
+    * of window + join scheduling that dominate a small shortlist.
+    * None when a pair sim is null, which the frame route handles.
+    */
+  private[graft] def mmrOnDriver(short: DataFrame, pair: DataFrame, k: Int,
+      lamNum: Int, lamDen: Int): Option[DataFrame] = {
+    val shortRows = short.collect()
+    val pairRows = pair.collect()
+    if (pairRows.exists(_.isNullAt(3))) return None
+    val byQ = shortRows.groupBy(_.get(0))
+    val cc = new java.util.HashMap[(Any, Any, Any), java.lang.Long](
+      pairRows.length * 2)
+    pairRows.foreach(r => cc.put((r.get(0), r.get(1), r.get(2)),
+      java.lang.Long.valueOf(r.getLong(3))))
+    val lamA = lamNum.toLong
+    val lamB = (lamDen - lamNum).toLong
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    byQ.foreach { case (q, rows) =>
+      // (c_id, sim_e6, maxsel)
+      var state = rows.map(r => (r.get(1), r.getLong(2), 0L)).toSeq
+      var i = 1
+      while (i <= k && state.nonEmpty) {
+        // argmax by (score desc, c_id asc) — the window's order
+        var best = state.head
+        var bestScore = lamA * best._2 - lamB * best._3
+        state.tail.foreach { e =>
+          val s = lamA * e._2 - lamB * e._3
+          if (s > bestScore ||
+              (s == bestScore && DriverRoute.compareIds(e._1, best._1) < 0)) {
+            best = e; bestScore = s
           }
         }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("q_id",
-            short.schema("q_id").dataType),
-          org.apache.spark.sql.types.StructField("c_id",
-            short.schema("c_id").dataType),
-          org.apache.spark.sql.types.StructField("pick_rank",
-            org.apache.spark.sql.types.IntegerType, nullable = false),
-          org.apache.spark.sql.types.StructField("score_e6",
-            org.apache.spark.sql.types.LongType)))
-        val res = DriverRoute.frameOf(spark, out.toSeq, schema).persist()
-        res.count()
-        return res
+        out += Row(q, best._1, i, bestScore)
+        val picked = best._1
+        state = state.flatMap { e =>
+          if (e._1 == picked) None
+          else {
+            // inner-join semantics: an entry with no pair row is
+            // dropped, exactly like the frame route's join (the cv × cv
+            // pair table is complete per query, so this never fires on
+            // well-formed input)
+            val s = cc.get((q, e._1, picked))
+            if (s == null) None
+            else Some((e._1, e._2, math.max(e._3, s.longValue())))
+          }
+        }
+        i += 1
       }
     }
+    val schema = StructType(Seq(
+      StructField("q_id", short.schema("q_id").dataType),
+      StructField("c_id", short.schema("c_id").dataType),
+      StructField("pick_rank", IntegerType, nullable = false),
+      StructField("score_e6", LongType)))
+    val res = DriverRoute.frameOf(short.sparkSession, out.toSeq, schema)
+      .persist()
+    res.count()
+    Some(res)
+  }
 
+  /** Frame route of [[mmrDiverseTopK]]: k greedy rounds, each one
+    * window argmax + one join, partition-parallel across queries, with
+    * plans cut per round.
+    */
+  private[graft] def mmrByRounds(short: DataFrame, pair0: DataFrame, k: Int,
+      lamNum: Int, lamDen: Int): DataFrame = {
     val pair = pair0.persist()
     // `cached` tracks the round's PERSISTED frame (the CC/kmeans loop
     // pattern): `state` is its LogicalRDD re-plan, whose unpersist

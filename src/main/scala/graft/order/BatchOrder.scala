@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * The reference keeps a driver-side min-heap ordered by
   * (step, txId, arrivalOrder) and pops everything strictly below the
   * quorum (tx_queue/priority_queue.go, tx_queue.go). In Spark the heap
-  * disappears: ordering is declared per micro-batch with orderBy and the
-  * pops become filters, so the sort runs distributed and only once, at
-  * emission.
+  * disappears: the pops become filters, and the order matters only
+  * within a key, where `LwwMerge.merge` sorts each key's events by
+  * position — no global sort.
   */
 object BatchOrder {
 
@@ -39,13 +39,6 @@ object BatchOrder {
 
   private def param(x: Long): Column =
     graft.functions.NativeExpressions.paramLong(x)
-
-  /** Global merge order: (step, txId) unsigned, then per-partition
-    * arrival (source offset) as the stable tie-break
-    * (priority_queue.go:11-15 — the arrival counter).
-    */
-  def mergeOrder(df: DataFrame): DataFrame =
-    df.orderBy(ux(col("step")), ux(col("txId")), col("partitionId"), col("offset"))
 
   /** Tag changes that violate per-partition order: a change whose
     * position is <= the latest heartbeat previously seen on its own
@@ -87,16 +80,6 @@ object BatchOrder {
         struct(ux(col("step")).as("s"), ux(col("txId")).as("t")) <= col("lastHb"))
       .drop("hb", "isHb", "ctable", "cpart", "chb", "runHb", "lastHb")
   }
-
-  /** Per-partition maxima of a heartbeat frame — the distributed input
-    * to the driver-side tracker. Rows: (tableId, partitionId, step, txId).
-    */
-  def partitionMaxima(hbs: DataFrame): DataFrame =
-    hbs.groupBy(col("tableId"), col("partitionId"))
-      .agg(max(struct(ux(col("step")).as("us"), ux(col("txId")).as("ut"),
-        col("step"), col("txId"))).as("m"))
-      .select(col("tableId"), col("partitionId"),
-        col("m.step").as("step"), col("m.txId").as("txId"))
 
   /** Heartbeat maxima FUSED with the batch's malformed-frame count,
     * over the raw parsed frame (CdcParser.parseEnvelope output): one

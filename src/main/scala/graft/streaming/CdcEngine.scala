@@ -238,7 +238,8 @@ final class CdcEngine(
       // one fused job that fills both are planned with AQE off at a
       // fixed width (see preEmissionWidth), so the collect below runs
       // as ONE job instead of one job per adaptive query stage.
-      val (pendingAll, statRow) = withLowLatency(true, preEmissionWidth) {
+      val (pendingAll, statRow) =
+        graft.GraftSession.withLowLatency(spark, preEmissionWidth) {
         // dead-letter malformed frames. Stop/Continue defer the write
         // behind the malformed count that rides the heartbeat-maxima
         // aggregation (one fused full-scan job), so the common
@@ -405,21 +406,17 @@ final class CdcEngine(
       // batch still merges 32-wide.
       val nPending = statRow.getLong(0)
       val small = nPending <= CdcEngine.SmallBatchRows
-      withLowLatency(small, lowLatencyWidth(nPending)) {
+      def emit(): Unit =
         man = if (man.state.stage == Stage.InitialScan)
           initialScan(man, pendingAll, batchId, statRow)
         else emitBelowQuorum(man, pendingAll, batchId)
-      }
+      if (small)
+        graft.GraftSession.withLowLatency(spark,
+          lowLatencyWidth(nPending))(emit())
+      else emit()
       phase("emit")
 
-      // owner check inside the transaction (ST7): the lease must still
-      // be ours at the moment the commit becomes visible
-      lock.tryAcquire()
-      if (!lock.verifyHeld())
-        throw new IllegalStateException("lost the writer lease; aborting commit")
-      TransactionalStore.commit(root, man.copy(version = man.version + 1,
-        fencingToken = lock.heldToken.getOrElse(0L),
-        lastBatchId = math.max(batchId, man.lastBatchId)))
+      commitManifest(man, batchId)
       committed = true
       metrics.batchCommitted((System.nanoTime() - t0) / 1000000L)
       // merge-on-read health: live chain files + chains folded away
@@ -458,32 +455,6 @@ final class CdcEngine(
   }
 
   // ---- emission ----
-
-  /** Run `f` with AQE disabled and `parts` shuffle partitions — the
-    * right execution regime for a small working set, where per-stage
-    * adaptive replanning and wide shuffles cost far more wall time than
-    * the data, and for the pre-emission phase (see [[preEmissionWidth]]).
-    * Frames cached inside `f` keep the plan made under it. The engine
-    * owns its session while a batch is in flight (foreachBatch
-    * serializes batches), so the temporary session-conf flip cannot
-    * race another engine query.
-    */
-  private def withLowLatency[T](enable: Boolean, parts: Int = 1)(f: => T): T =
-    if (!enable) f
-    else {
-      val conf = spark.conf
-      val aqe = conf.getOption("spark.sql.adaptive.enabled")
-      val sp = conf.getOption("spark.sql.shuffle.partitions")
-      conf.set("spark.sql.adaptive.enabled", "false")
-      conf.set("spark.sql.shuffle.partitions", parts.toString)
-      try f
-      finally {
-        aqe.fold(conf.unset("spark.sql.adaptive.enabled"))(
-          conf.set("spark.sql.adaptive.enabled", _))
-        sp.fold(conf.unset("spark.sql.shuffle.partitions"))(
-          conf.set("spark.sql.shuffle.partitions", _))
-      }
-    }
 
   /** Empty pending frame as a LOCAL relation — provably empty to the
     * optimizer, which lets applyCut skip the remainder write.
@@ -608,10 +579,7 @@ final class CdcEngine(
               // stamp lastBatchId on intermediate commits too: a crash
               // after this commit replays the SAME batch id, which must
               // re-enable the pending dedup against the stored remainder
-              man = man.copy(version = man.version + 1,
-                fencingToken = lock.heldToken.getOrElse(0L),
-                lastBatchId = math.max(batchId, man.lastBatchId))
-              TransactionalStore.commit(root, man)
+              man = commitManifest(man, batchId)
               remaining = pendingDF(man)
             }
           }
@@ -977,9 +945,28 @@ final class CdcEngine(
 
   private def persistFatal(msg: String): Unit = {
     val man = TransactionalStore.read(root)
-    TransactionalStore.commit(root, man.copy(version = man.version + 1,
+    commitManifest(man.copy(
+      state = man.state.copy(state = EngineState.Fatal, lastMsg = msg)),
+      man.lastBatchId)
+  }
+
+  /** Every manifest swap goes through here. The owner check sits
+    * inside the transaction (ST7): renew the lease and verify it is
+    * still ours at the moment the commit becomes visible —
+    * TransactionalStore's fencing check alone passes until a new owner
+    * first commits. Then commit `man` as the next version under our
+    * fencing token, `lastBatchId` raised to `batchId`, and return it.
+    */
+  private def commitManifest(man: TransactionalStore.Manifest,
+      batchId: Long): TransactionalStore.Manifest = {
+    lock.tryAcquire()
+    if (!lock.verifyHeld())
+      throw new IllegalStateException("lost the writer lease; aborting commit")
+    val next = man.copy(version = man.version + 1,
       fencingToken = lock.heldToken.getOrElse(0L),
-      state = man.state.copy(state = EngineState.Fatal, lastMsg = msg)))
+      lastBatchId = math.max(batchId, man.lastBatchId))
+    TransactionalStore.commit(root, next)
+    next
   }
 
   private def trackerSnapshotDF(): DataFrame = {

@@ -137,6 +137,28 @@ class CdcEngineSpec extends SparkSpec {
       "clean batch must not create a DLQ store")
   }
 
+  test("a multi-chunk drain after the lease moved on commits no chunk") {
+    val root = Files.createTempDirectory("graft-lease").toString
+    val cfg = EngineConfig("inst1",
+      Seq(StreamConfig(0, s"$root/src", "users", partitions = 2)),
+      s"$root/dst", ProblemStrategy.Stop, maxBatchSize = 3, buckets = 4)
+    val e = new CdcEngine(spark, cfg, Map(0 -> usersMeta))
+    e.bootstrap()
+    // a second instance whose clock runs 120 s ahead sees the engine's
+    // 60 s lease as expired and takes it over
+    val other = new graft.sink.LeaseLock(s"$root/dst", "other", 60000L,
+      clock = () => System.currentTimeMillis() + 120000L)
+    assert(other.tryAcquire())
+    val before = graft.sink.TransactionalStore.read(s"$root/dst").version
+    val rows = (0 until 12).map { i =>
+      (s"""{"update":{"score":$i},"key":[${i % 6}],"ts":[${10 + i},1]}""",
+        (i % 2).toLong, (i / 2).toLong)
+    }
+    intercept[IllegalStateException] { e.processBatch(frame(rows: _*), 0L) }
+    assert(graft.sink.TransactionalStore.read(s"$root/dst").version == before,
+      "a chunk commit overwrote the manifest of the new lease owner")
+  }
+
   test("a marginal RUN-stage batch stays inside its job budget") {
     // the fixed per-micro-batch floor is driver work per Spark JOB
     // (planning, scheduling, codegen) — wall clock is host-noisy, but

@@ -54,29 +54,37 @@ class CorpusOpsSpec extends SparkSpec {
     }
   }
 
+  /** The two routes of connectedComponents, called directly. */
+  private def componentsOnDriver(edges: org.apache.spark.sql.DataFrame) =
+    Dedup.componentsOnDriver(Dedup.symmetricEdges(edges, "id_a", "id_b")._1)
+  private def componentsByRounds(edges: org.apache.spark.sql.DataFrame,
+      maxIters: Int = 25) = {
+    val (symSelf, sz) = Dedup.symmetricEdges(edges, "id_a", "id_b")
+    Dedup.componentsByRounds(symSelf, sz, maxIters)
+  }
+
   test("connectedComponents: maxIters trips instead of silent partial") {
-    // pin the frame-based fixpoint: the guard under test lives in the
-    // round loop, which the r17 driver route (union-find under
-    // cc.driverMaxEdges) legitimately never enters
+    // the guard under test lives in the frame route's round loop,
+    // which the driver route (union-find) never enters
     val edges = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
-    try intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(edges, "id_a", "id_b", maxIters = 2)
-    } finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
+    intercept[IllegalArgumentException] {
+      componentsByRounds(edges, maxIters = 2)
+    }
   }
 
   test("connectedComponents: driver and fixpoint routes agree") {
     val rnd = new scala.util.Random(7)
     val edges = Seq.fill(300)((rnd.nextInt(120).toLong,
       rnd.nextInt(120).toLong)).toDF("id_a", "id_b")
-    val viaDriver = Dedup.connectedComponents(edges, "id_a", "id_b")
+    val viaDriver = componentsOnDriver(edges)
       .orderBy("id").collect().map(r => (r.get(0), r.get(1))).toSeq
-    spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
-    val viaRounds =
-      try Dedup.connectedComponents(edges, "id_a", "id_b")
-        .orderBy("id").collect().map(r => (r.get(0), r.get(1))).toSeq
-      finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
+    val viaRounds = componentsByRounds(edges)
+      .orderBy("id").collect().map(r => (r.get(0), r.get(1))).toSeq
     assert(viaDriver === viaRounds)
+    // the operator itself admits this small graph to the driver route
+    assert(Dedup.connectedComponents(edges, "id_a", "id_b")
+      .orderBy("id").collect().map(r => (r.get(0), r.get(1))).toSeq ===
+      viaDriver)
   }
 
   test("connectedComponents: non-BMP string ids — routes agree on " +
@@ -90,32 +98,13 @@ class CorpusOpsSpec extends SparkSpec {
     val pu = "\uE000"                               // private use, BMP
     assert(hi.compareTo(pu) < 0) // Java order would pick hi as min
     val edges = Seq((hi, pu), (pu, hi + "x")).toDF("id_a", "id_b")
-    val viaDriver = Dedup.connectedComponents(edges, "id_a", "id_b")
+    val viaDriver = componentsOnDriver(edges)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
-    spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
-    val viaRounds =
-      try Dedup.connectedComponents(edges, "id_a", "id_b")
-        .collect().map(r => (r.getString(0), r.getString(1))).toMap
-      finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
+    val viaRounds = componentsByRounds(edges)
+      .collect().map(r => (r.getString(0), r.getString(1))).toMap
     assert(viaDriver === viaRounds)
     // and both label with the UTF8-order minimum, the BMP id
     assert(viaDriver.values.toSet === Set(pu))
-  }
-
-  test("connectedComponents: byte gate routes oversized string-id " +
-      "graphs to the frame fixpoint") {
-    // ids wide enough that 3 edges exceed a tiny byte ceiling: the
-    // driver route must decline (result unchanged — both routes are
-    // equivalence-pinned above; this pins the GATE)
-    val wide = "w" * 64
-    val edges = Seq((wide + "1", wide + "2"), (wide + "2", wide + "3"),
-      (wide + "3", wide + "4")).toDF("id_a", "id_b")
-    spark.conf.set("spark.graft.cc.driverMaxBytes", "1k")
-    val got =
-      try Dedup.connectedComponents(edges, "id_a", "id_b")
-        .collect().map(r => (r.getString(0), r.getString(1))).toMap
-      finally spark.conf.unset("spark.graft.cc.driverMaxBytes")
-    assert(got.values.toSet === Set(wide + "1"))
   }
 
   test("topTokenCount: run-length fold equals groupBy count") {
@@ -742,6 +731,21 @@ class CorpusOpsSpec extends SparkSpec {
     assert(got.getLong(2) == -223144L)
     assert(got.getLong(3) == 693147L - 223144L)
     assert(got.getBoolean(4))
+  }
+
+  test("TextOps vocabulary aggregates leave no cache entry behind") {
+    val docs = Seq((1L, "aa bb aa", Some(true)), (2L, "bb cc", Some(false)),
+      (3L, "", None: Option[Boolean])).toDF("id", "text", "pos")
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    assert(cache.isEmpty)
+    TextOps.unigramSurprisal(docs, col("id"), col("text")).collect()
+    assert(cache.isEmpty, "unigramSurprisal pinned a cache entry")
+    TextOps.bigramSurprisal(docs, col("id"), col("text")).collect()
+    assert(cache.isEmpty, "bigramSurprisal pinned a cache entry")
+    TextOps.naiveBayesLogOdds(docs, col("id"), col("text"), col("pos"))
+      .collect()
+    assert(cache.isEmpty, "naiveBayesLogOdds pinned a cache entry")
   }
 
   test("chunkLayout: offsets, boundary crossing, zero-token docs, stats") {

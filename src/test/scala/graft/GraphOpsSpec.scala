@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.GraphOps
+import graft.ops.{DriverRoute, GraphOps}
 import org.apache.spark.sql.functions._
 
 /** GraphOps: source-affinity edge construction (distinct-per-source
@@ -81,14 +81,14 @@ class GraphOpsSpec extends SparkSpec {
       .map { case (a, b) => (math.min(a, b), math.max(a, b),
         rnd.nextInt(9).toLong + 1L) }
       .distinct.toDF("s_a", "s_b", "w")
-    val viaDriver = GraphOps.pageRank(e, iters = 4)
-      .orderBy("node").collect().map(r => (r.get(0), r.getLong(1))).toSeq
-    spark.conf.set("spark.graft.pagerank.driverMaxEdges", "0")
-    val viaRounds =
-      try GraphOps.pageRank(e, iters = 4)
-        .orderBy("node").collect().map(r => (r.get(0), r.getLong(1))).toSeq
-      finally spark.conf.unset("spark.graft.pagerank.driverMaxEdges")
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("node").collect().map(r => (r.get(0), r.getLong(1))).toSeq
+    val viaDriver = ranks(GraphOps.pageRankOnDriver(
+      GraphOps.weightedEdges(e)._1, iters = 4, damping = 0.85))
+    val (we, sz) = GraphOps.weightedEdges(e)
+    val viaRounds = ranks(GraphOps.pageRankByRounds(we, sz.rows, iters = 4))
     assert(viaDriver === viaRounds)
+    assert(ranks(GraphOps.pageRank(e, iters = 4)) === viaDriver)
   }
 
   test("triangleCount: driver and frame routes agree on random graphs") {
@@ -98,17 +98,38 @@ class GraphOpsSpec extends SparkSpec {
         .filter { case (a, b) => a != b }
         .map { case (a, b) => (math.min(a, b), math.max(a, b), 1L) }
         .distinct.toDF("s_a", "s_b", "w")
-      val viaDriver = GraphOps.triangleCount(e).orderBy("node")
+      def tris(df: org.apache.spark.sql.DataFrame) = df.orderBy("node")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).toSeq
-      spark.conf.set("spark.graft.triangles.driverMaxEdges", "0")
-      val viaFrames =
-        try GraphOps.triangleCount(e).orderBy("node")
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getLong(3))).toSeq
-        finally spark.conf.unset("spark.graft.triangles.driverMaxEdges")
+      val viaDriver = tris(GraphOps.trianglesOnDriver(spark,
+        new GraphOps.OrientedEdges(e.select("s_a", "s_b").collect()),
+        org.apache.spark.sql.types.LongType))
+      val viaFrames = tris(GraphOps.triangleCountFrames(e))
       assert(viaDriver === viaFrames, s"seed $seed")
+      assert(tris(GraphOps.triangleCount(e)) === viaDriver, s"seed $seed")
     }
+  }
+
+  test("triangleCount: a clique over the wedge bound takes the frame route") {
+    // K_200: 19,900 edges, far under the work ceiling, but 2,626,800
+    // oriented wedges, over it — the driver's work is the wedges
+    val n = 200L
+    val e = (for (a <- 0L until n; b <- a + 1 until n) yield (a, b, 1L))
+      .toDF("s_a", "s_b", "w")
+    val g = new GraphOps.OrientedEdges(e.select("s_a", "s_b").collect())
+    assert(g.wedges === (0L until n).map(d => d * (d - 1)).sum)
+    assert(e.count() <= DriverRoute.MaxWork && g.wedges > DriverRoute.MaxWork)
+    val got = GraphOps.triangleCount(e)
+    // the driver route returns a LocalRelation; the frame route plans
+    // joins over the input
+    assert(!got.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("node").collect().map(_.toSeq).toSeq
+    val viaFrames = rows(GraphOps.triangleCountFrames(e))
+    assert(rows(got) === viaFrames)
+    // every node closes C(199, 2) triangles at lcc 1
+    assert(viaFrames.forall(r => r(2) == 199L * 198 / 2 && r(3) == 1000000L))
   }
 
   test("triangleCount: K3 is one triangle, lcc exactly 1") {

@@ -178,26 +178,26 @@ class SimJoinSpec extends SparkSpec {
 
   test("MMR: driver and frame routes replay one greedy walk") {
     // random quantized vectors, several queries: the driver route
-    // (spark.graft.mmr.driverMaxRows gate) must match the k-round
-    // frame loop pick for pick — the scores are exact integers on
-    // both routes, so equality is bitwise
+    // must match the k-round frame loop pick for pick — the scores are
+    // exact integers on both routes, so equality is bitwise
     val rnd = new scala.util.Random(13)
     val rows = (0 until 60).map(i =>
       (i.toLong, Seq.fill(6)(rnd.nextInt(2000).toLong - 1000L)))
       .toDF("id", "vec")
     val q = rows.filter(col("id") < 5)
-    def run(): Seq[(Long, Long, Int, Long)] =
-      Similarity.mmrDiverseTopK(q, rows, shortlist = 8, k = 4,
-          lamNum = 1, lamDen = 2)
-        .orderBy("q_id", "pick_rank")
+    def picks(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Int, Long)] =
+      df.orderBy("q_id", "pick_rank")
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSeq
-    val viaDriver = run()
-    spark.conf.set("spark.graft.mmr.driverMaxRows", "0")
-    val viaRounds = try run()
-      finally spark.conf.unset("spark.graft.mmr.driverMaxRows")
+    val (short, pair) = Similarity.mmrShortlist(q, rows, shortlist = 8)
+    val viaDriver = picks(Similarity.mmrOnDriver(short, pair, k = 4,
+      lamNum = 1, lamDen = 2).get)
+    val viaRounds = picks(Similarity.mmrByRounds(short, pair, k = 4,
+      lamNum = 1, lamDen = 2))
     assert(viaDriver === viaRounds)
     assert(viaDriver.size === 5 * 4)
+    assert(picks(Similarity.mmrDiverseTopK(q, rows, shortlist = 8, k = 4,
+      lamNum = 1, lamDen = 2)) === viaDriver)
   }
 
   test("SQ8: bounds map to 0/255, constant dims to 0, knn exact on fixture") {
